@@ -18,7 +18,9 @@ import org.apache.spark.sql.expressions.Window
   *  - SimHash: 64-bit signature, banded by 16-bit chunks for Hamming ≤ k
   *    candidate generation.
   *
-  * No driver-side collect anywhere; every stage is a DataFrame op.
+  * Every stage is a DataFrame op. The standing-store paths (judge,
+  * merge, forget) collect bucket lists and capped id lists to the
+  * driver, each bounded by a bucket count or [[PushdownCap]].
   *
   * Cache lifecycle: the pair generators cache the shared shingle/signature
   * relation (consumed by both the candidate join and the verification
@@ -753,22 +755,32 @@ object Dedup {
     * the touched bucket ids. */
   def mergeIntoSignatureStore(spark: SparkSession, path: String,
                               delta: DataFrame, idCol: String): Seq[Int] = {
-    val (standing, buckets) = readSignatureStore(spark, path)
-    val withB = delta
-      .withColumn("d_bucket",
-        pmod(col(idCol), lit(buckets.toLong)).cast("int"))
-    val touched = withB.select(col("d_bucket")).distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
-    if (touched.isEmpty) return Seq.empty
-    val standingSlice = standing
-      .filter(col("d_bucket").isin(touched: _*))
-    val merged = standingSlice.unionByName(withB)
-      .groupBy(col("d_bucket"), col(idCol), col("k"))
-      .agg(min(col("mh")).as("mh"))
-    StoreSwap.stagedRewrite(spark, path, "d_bucket", touched, merged,
-      Seq(col(idCol), col("k")))
+    StoreSwap.recover(spark, path)
+    val buckets = StoreSwap.storeBuckets(spark, path)
+    val touched = docBuckets(delta, idCol, buckets)
+    mergeSignatures(spark, path, delta, idCol, buckets, touched)
     touched
   }
+
+  /** [[mergeIntoSignatureStore]] over the doc buckets `touched` the
+    * caller already holds. A touched bucket none of whose delta docs
+    * carries a signature (no shingles) is rewritten with its content
+    * unchanged. */
+  private def mergeSignatures(spark: SparkSession, path: String,
+                              delta: DataFrame, idCol: String,
+                              buckets: Int, touched: Seq[Int]): Unit =
+    if (touched.nonEmpty) {
+      val withB = delta
+        .withColumn("d_bucket",
+          pmod(col(idCol), lit(buckets.toLong)).cast("int"))
+      val merged = dirDf(spark, path, "data", "d_bucket")
+        .filter(col("d_bucket").isin(touched: _*))
+        .unionByName(withB)
+        .groupBy(col("d_bucket"), col(idCol), col("k"))
+        .agg(min(col("mh")).as("mh"))
+      StoreSwap.stagedRewrite(spark, path, "d_bucket", touched, merged,
+        Seq(col(idCol), col("k")))
+    }
 
   /** EXACTLY-ONCE composed ingest of a delta batch into the signature
     * store and its serving structures — the foreachBatch body of a
@@ -798,14 +810,22 @@ object Dedup {
     if (batchId.exists(
         StoreSwap.committedBatches(spark, path, "data").contains))
       return // redelivered batch: already fully absorbed and acked
+    // the three merges share one read of the store's constants and ONE
+    // collect of the delta's doc buckets: each public merge would read
+    // the sidecars and collect the same bucket list again
     def run(): Unit = {
-      mergeIntoSignatureStore(spark, path,
-        minhashSignatures(deltaDocs, idCol, textCol, n, numHashes), idCol)
+      StoreSwap.recover(spark, path)
+      val buckets = StoreSwap.storeBuckets(spark, path)
+      val touched = docBuckets(deltaDocs, idCol, buckets)
+      mergeSignatures(spark, path,
+        minhashSignatures(deltaDocs, idCol, textCol, n, numHashes), idCol,
+        buckets, touched)
       if (shingleSidecarExists(spark, path))
-        mergeShinglesIntoStore(spark, path, deltaDocs, idCol, textCol)
+        mergeShingles(spark, path, deltaDocs, idCol, textCol, buckets,
+          touched)
       if (StoreSwap.dirExists(spark, path, "bands"))
-        mergeIntoBandIndex(spark, path,
-          deltaDocs.select(col(idCol)), idCol)
+        mergeBands(spark, path, deltaDocs.select(col(idCol)), idCol,
+          buckets, touched)
       batchId.foreach(StoreSwap.ackBatch(spark, path, "data", _))
     }
     // a UNIFIED store upgrades the composed flow from idempotence+
@@ -839,8 +859,8 @@ object Dedup {
     val seed =
       if (bm.getFileSystem(spark.sparkContext.hadoopConfiguration)
             .exists(bm)) {
-        val buckets = spark.read.parquet(path + "/meta").head.getInt(0)
-        val (b, r, ib) = bandsMeta(spark, path, buckets)
+        val (b, r, ib) =
+          bandsMeta(spark, path, StoreSwap.storeBuckets(spark, path))
         bandsMetaEntries(b, r, ib)
       } else Map.empty[String, Seq[Long]]
     StoreSwap.unifyVersioning(spark, path,
@@ -853,9 +873,16 @@ object Dedup {
   def readSignatureStore(spark: SparkSession,
                          path: String): (DataFrame, Int) = {
     StoreSwap.recover(spark, path)
-    val buckets = spark.read.parquet(path + "/meta").head.getInt(0)
-    (dirDf(spark, path, "data", "d_bucket"), buckets)
+    (dirDf(spark, path, "data", "d_bucket"),
+      StoreSwap.storeBuckets(spark, path))
   }
+
+  /** The sorted distinct doc buckets (`id mod buckets`) of `docs`'
+    * `idCol` — one collect, bounded by the bucket count. */
+  private def docBuckets(docs: DataFrame, idCol: String,
+                         buckets: Int): Seq[Int] =
+    docs.select(pmod(col(idCol), lit(buckets.toLong)).cast("int").as("b"))
+      .distinct().collect().map(_.getInt(0)).toSeq.sorted
 
   /** TIME-TRAVEL read of a VERSIONED signature store — the text twin
     * of [[Similarity.readStandingStoreAt]]: any retained manifest
@@ -868,11 +895,9 @@ object Dedup {
     * [[readSignatureStore]]: the `d_bucket` partition column is kept
     * in both. */
   def readSignatureStoreAt(spark: SparkSession, path: String,
-                           version: Int): (DataFrame, Int) = {
-    val buckets = spark.read.parquet(path + "/meta").head.getInt(0)
+                           version: Int): (DataFrame, Int) =
     (StoreSwap.readVersionedAt(spark, path, "data", "d_bucket", version),
-      buckets)
-  }
+      StoreSwap.storeBuckets(spark, path))
 
   /** Retained (readable) manifest versions of a versioned signature
     * store's data, ascending; last = live. */
@@ -945,9 +970,7 @@ object Dedup {
     StoreSwap.withLeaseAtomic(spark, path) {
     val (standing, buckets) = readSignatureStore(spark, path)
     val ids = docIds.select(col(idCol)).distinct()
-    val touched = ids
-      .select(pmod(col(idCol), lit(buckets.toLong)).cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted
+    val touched = docBuckets(ids, idCol, buckets)
     if (touched.isEmpty) return 0L
     val slice = standing
       .filter(col("d_bucket").isin(touched: _*))
@@ -990,7 +1013,7 @@ object Dedup {
                           docs: DataFrame, idCol: String, textCol: String,
                           n: Int = 3): Unit = StoreSwap.withLease(spark, path) {
     StoreSwap.recover(spark, path)
-    val buckets = spark.read.parquet(path + "/meta").head.getInt(0)
+    val buckets = StoreSwap.storeBuckets(spark, path)
     writeDir(spark, path, "shingles", "d_bucket",
       shinglePolyHashes(docs, idCol, textCol, n)
         .withColumn("d_bucket",
@@ -1020,23 +1043,31 @@ object Dedup {
     StoreSwap.recover(spark, path)
     require(shingleSidecarExists(spark, path),
       s"$path has no shingle sidecar — build it with writeShingleSidecar")
-    val n = spark.read.parquet(path + "/shingles_meta").head.getInt(0)
-    val buckets = spark.read.parquet(path + "/meta").head.getInt(0)
-    val ids = deltaDocs.select(col(idCol).as("id")).distinct()
-    val touched = ids
-      .select(pmod(col("id"), lit(buckets.toLong)).cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted
-    if (touched.isEmpty) return Seq.empty
-    val fresh = shinglePolyHashes(deltaDocs, idCol, textCol, n)
-      .withColumn("d_bucket", pmod(col("id"), lit(buckets.toLong)).cast("int"))
-    val kept = dirDf(spark, path, "shingles", "d_bucket")
-      .filter(col("d_bucket").isin(touched: _*))
-      .join(ids, Seq("id"), "left_anti")
-      .select(col("id"), col("x"), col("d_bucket"))
-    StoreSwap.stagedRewrite(spark, path, "d_bucket", touched,
-      kept.unionByName(fresh), Seq(col("id"), col("x")), "shingles")
+    val buckets = StoreSwap.storeBuckets(spark, path)
+    val touched = docBuckets(deltaDocs, idCol, buckets)
+    mergeShingles(spark, path, deltaDocs, idCol, textCol, buckets, touched)
     touched
   }
+
+  /** [[mergeShinglesIntoStore]] over the delta's doc buckets `touched`,
+    * which the caller already holds. */
+  private def mergeShingles(spark: SparkSession, path: String,
+                            deltaDocs: DataFrame, idCol: String,
+                            textCol: String, buckets: Int,
+                            touched: Seq[Int]): Unit =
+    if (touched.nonEmpty) {
+      val n = StoreSwap.readConstants(spark, path + "/shingles_meta")("n")
+      val ids = deltaDocs.select(col(idCol).as("id")).distinct()
+      val fresh = shinglePolyHashes(deltaDocs, idCol, textCol, n)
+        .withColumn("d_bucket",
+          pmod(col("id"), lit(buckets.toLong)).cast("int"))
+      val kept = dirDf(spark, path, "shingles", "d_bucket")
+        .filter(col("d_bucket").isin(touched: _*))
+        .join(ids, Seq("id"), "left_anti")
+        .select(col("id"), col("x"), col("d_bucket"))
+      StoreSwap.stagedRewrite(spark, path, "d_bucket", touched,
+        kept.unionByName(fresh), Seq(col("id"), col("x")), "shingles")
+    }
 
   /** Replayable per-band signatures over a k-sorted signature array:
     * band b's value is a polynomial fold (seed b, multiplier 1000003,
@@ -1196,11 +1227,8 @@ object Dedup {
   /** The inventory's rows for `docIds` — doc-bucket pruned. */
   private def invRowsForDocs(spark: SparkSession, path: String,
                              docIds: DataFrame, idCol: String,
-                             buckets: Int): DataFrame = {
+                             db: Seq[Int]): DataFrame = {
     val ids = docIds.select(col(idCol).as("id")).distinct()
-    val db = ids
-      .select(pmod(col("id"), lit(buckets.toLong)).cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
     dirDf(spark, path, "bands_inv", "d_bucket")
       .filter(col("d_bucket").isin(db: _*))
       .join(ids, Seq("id"), "left_semi")
@@ -1212,11 +1240,8 @@ object Dedup {
     * existed (their bands_meta has two columns). */
   private def bandsMeta(spark: SparkSession, path: String,
                         storeBuckets: Int): (Int, Int, Int) = {
-    val df = spark.read.parquet(path + "/bands_meta")
-    val m = df.head
-    val idx = if (df.columns.contains("idx_buckets"))
-      m.getAs[Int]("idx_buckets") else storeBuckets
-    (m.getInt(0), m.getInt(1), idx)
+    val m = StoreSwap.readConstants(spark, path + "/bands_meta")
+    (m("bands"), m("rows_per_band"), m.getOrElse("idx_buckets", storeBuckets))
   }
 
   /** The layout constants a reader at `asOf` must derive band rows
@@ -1257,15 +1282,12 @@ object Dedup {
   /** Current doc-pruned band rows for `docIds` — reads the docs'
     * POST-merge signatures through the store's doc-bucket pruning. */
   private def bandRowsForDocs(spark: SparkSession, path: String,
-                              docIds: DataFrame,
-                              idCol: String): DataFrame = {
-    val (sigs, buckets) = readSignatureStore(spark, path)
+                              docIds: DataFrame, idCol: String,
+                              buckets: Int, db: Seq[Int]): DataFrame = {
     val (bands, r, idxBuckets) = bandsMeta(spark, path, buckets)
     val ids = docIds.select(col(idCol)).distinct()
-    val db = ids
-      .select(pmod(col(idCol), lit(buckets.toLong)).cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val docSigs = sigs.filter(col("d_bucket").isin(db: _*))
+    val docSigs = dirDf(spark, path, "data", "d_bucket")
+      .filter(col("d_bucket").isin(db: _*))
       .join(ids, Seq(idCol), "left_semi")
       .select(col(idCol), col("k"), col("mh"))
     bandRows(docSigs, idCol, bands, r, idxBuckets)
@@ -1286,7 +1308,18 @@ object Dedup {
                          docIds: DataFrame,
                          idCol: String): Seq[Int] = StoreSwap.withLeaseAtomic(
       spark, path) {
-    val rows = bandRowsForDocs(spark, path, docIds, idCol)
+    StoreSwap.recover(spark, path)
+    val buckets = StoreSwap.storeBuckets(spark, path)
+    mergeBands(spark, path, docIds, idCol, buckets,
+      docBuckets(docIds, idCol, buckets))
+  }
+
+  /** [[mergeIntoBandIndex]] over the docs' doc buckets `db`, which the
+    * caller already holds. Returns the touched index buckets. */
+  private def mergeBands(spark: SparkSession, path: String,
+                         docIds: DataFrame, idCol: String, buckets: Int,
+                         db: Seq[Int]): Seq[Int] = {
+    val rows = bandRowsForDocs(spark, path, docIds, idCol, buckets, db)
       .localCheckpoint(true) // |docs|·bands rows, referenced twice
     val touched = rows.select(col("bb_bucket")).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
@@ -1305,11 +1338,6 @@ object Dedup {
     // re-running the merge (the documented recovery for every store
     // mutation) completes it idempotently.
     if (bandInvExists(spark, path)) {
-      val buckets = spark.read.parquet(path + "/meta").head.getInt(0)
-      val ids = docIds.select(col(idCol).as("id")).distinct()
-      val db = ids
-        .select(pmod(col("id"), lit(buckets.toLong)).cast("int").as("b"))
-        .distinct().collect().map(_.getInt(0)).toSeq.sorted
       val invSlice = dirDf(spark, path, "bands_inv", "d_bucket")
         .filter(col("d_bucket").isin(db: _*))
         .select(col("id"), col("band"), col("bsig"), col("bb_bucket"))
@@ -1335,11 +1363,11 @@ object Dedup {
       spark, path) {
     StoreSwap.recover(spark, path)
     val hasInv = bandInvExists(spark, path)
+    val buckets = StoreSwap.storeBuckets(spark, path)
+    val db = docBuckets(docIds, idCol, buckets)
     val rows =
-      if (hasInv) {
-        val buckets = spark.read.parquet(path + "/meta").head.getInt(0)
-        invRowsForDocs(spark, path, docIds, idCol, buckets)
-      } else bandRowsForDocs(spark, path, docIds, idCol)
+      if (hasInv) invRowsForDocs(spark, path, docIds, idCol, db)
+      else bandRowsForDocs(spark, path, docIds, idCol, buckets, db)
     val touched = rows.select(col("bb_bucket")).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
     if (touched.isEmpty) return 0L
@@ -1355,17 +1383,11 @@ object Dedup {
     // between the swaps re-runs to a no-op index rewrite, then
     // completes the inventory)
     if (hasInv) {
-      val buckets = spark.read.parquet(path + "/meta").head.getInt(0)
-      val db = ids
-        .select(pmod(col("id"), lit(buckets.toLong)).cast("int").as("b"))
-        .distinct().collect().map(_.getInt(0)).toSeq.sorted
-      if (db.nonEmpty) {
-        val invKept = dirDf(spark, path, "bands_inv", "d_bucket")
-          .filter(col("d_bucket").isin(db: _*))
-          .join(ids, Seq("id"), "left_anti")
-        StoreSwap.stagedRewrite(spark, path, "d_bucket", db, invKept,
-          Seq(col("id"), col("band")), "bands_inv")
-      }
+      val invKept = dirDf(spark, path, "bands_inv", "d_bucket")
+        .filter(col("d_bucket").isin(db: _*))
+        .join(ids, Seq("id"), "left_anti")
+      StoreSwap.stagedRewrite(spark, path, "d_bucket", db, invKept,
+        Seq(col("id"), col("band")), "bands_inv")
     }
     removed
   }
@@ -1390,10 +1412,11 @@ object Dedup {
     StoreSwap.recover(spark, path)
     require(bandInvExists(spark, path),
       s"$path has no band inventory — rebuild with writeBandIndex first")
-    val buckets = spark.read.parquet(path + "/meta").head.getInt(0)
-    val fresh = bandRowsForDocs(spark, path, docIds, idCol)
+    val buckets = StoreSwap.storeBuckets(spark, path)
+    val db = docBuckets(docIds, idCol, buckets)
+    val fresh = bandRowsForDocs(spark, path, docIds, idCol, buckets, db)
       .localCheckpoint(true) // |docs|·bands rows, referenced three times
-    val stale = invRowsForDocs(spark, path, docIds, idCol, buckets)
+    val stale = invRowsForDocs(spark, path, docIds, idCol, db)
       .join(fresh.select(col("id"), col("band"), col("bsig")),
         Seq("id", "band", "bsig"), "left_anti")
       .localCheckpoint(true)
@@ -1414,9 +1437,6 @@ object Dedup {
       Seq(col("band"), col("bsig"), col("id")), "bands")
     // inventory := exactly the fresh rows for these docs
     val ids = docIds.select(col(idCol).as("id")).distinct()
-    val db = ids
-      .select(pmod(col("id"), lit(buckets.toLong)).cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted
     val invKept = dirDf(spark, path, "bands_inv", "d_bucket")
       .filter(col("d_bucket").isin(db: _*))
       .select(col("id"), col("band"), col("bsig"), col("bb_bucket"))
@@ -1462,7 +1482,7 @@ object Dedup {
     // a judgment-only process must also roll forward a crashed index
     // mutation's committed swap, or it serves stale band rows
     StoreSwap.recover(spark, path)
-    val buckets = spark.read.parquet(path + "/meta").head.getInt(0)
+    val buckets = StoreSwap.storeBuckets(spark, path)
     // layout constants resolve from the PINNED manifest on historical
     // replays (a post-pin rebuild may have changed them); live from the
     // bands_meta sidecar
@@ -1485,7 +1505,7 @@ object Dedup {
         " judgment has no text fallback (the corpus text of that moment" +
         " is gone); only sidecar-carrying versions replay")
     if (sidecarPresent) {
-      val sn = spark.read.parquet(path + "/shingles_meta").head.getInt(0)
+      val sn = StoreSwap.readConstants(spark, path + "/shingles_meta")("n")
       require(sn == n,
         s"shingle width n=$n must match the sidecar's (n=$sn)")
     }
@@ -1521,9 +1541,11 @@ object Dedup {
       .getOption("graft.lsh.maxBroadcastMb")
       .flatMap(v => scala.util.Try(v.toDouble).toOption)
       .getOrElse(64.0) * 1024 * 1024)
-    val nDelta = dRowsAll.select(col("d_id")).distinct().count()
+    // ONE pass over the checkpointed band rows serves the chunking
+    // decision and, unchunked, the slice's two pruning lists
+    val stats = deltaBandStats(dRowsAll)
     val bcChunks = math.max(1L,
-      math.ceil(nDelta.toDouble * bands * 112L / targetBytes).toLong).toInt
+      math.ceil(stats.rows.toDouble * 112L / targetBytes).toLong).toInt
     // PUSHDOWN-SIZED sub-chunking, the second chunking driver: each
     // chunk's band-signature list (<= chunkDocs x bands values) and
     // candidate-id list only reach the parquet readers while they fit
@@ -1543,20 +1565,54 @@ object Dedup {
     // the broadcast budget below still chunks huge batches.
     val maxJudgeChunks = spark.conf.getOption("graft.lsh.maxJudgeChunks")
       .flatMap(_.toIntOption).getOrElse(1)
-    val pdChunks = math.ceil(nDelta.toDouble * bands / PushdownCap).toInt
+    val pdChunks = math.ceil(stats.rows.toDouble / PushdownCap).toInt
     val chunks =
       if (pdChunks > bcChunks && pdChunks <= maxJudgeChunks) pdChunks
       else bcChunks
-    def slice(dRows: DataFrame, dSh: DataFrame): DataFrame =
-      lshJudgeSlice(spark, path, dRows, dSh, standingSh, sidecarPresent,
-        buckets, threshold, storeDir)
-    if (chunks == 1) slice(dRowsAll, dShAll)
+    def slice(dRows: DataFrame, dSh: DataFrame,
+              st: DeltaBandStats): DataFrame =
+      lshJudgeSlice(spark, path, dRows, dSh, st, standingSh,
+        sidecarPresent, buckets, threshold, storeDir)
+    if (chunks == 1) slice(dRowsAll, dShAll, stats)
     else
       (0 until chunks).map { i =>
         val in = pmod(xxhash64(col("d_id")), lit(chunks.toLong)) === i
-        slice(dRowsAll.filter(in), dShAll.filter(in))
+        val dRows = dRowsAll.filter(in)
+        slice(dRows, dShAll.filter(in), deltaBandStats(dRows))
           .localCheckpoint(true) // run now; free this chunk's broadcast
       }.reduce(_ unionByName _)
+  }
+
+  /** What the judge needs to know of a delta's band rows before
+    * reading the index: the row count, the index buckets they touch,
+    * and their distinct band signatures when these fit [[PushdownCap]]
+    * (None past it — the scan then goes unfiltered, so the list is
+    * never shipped). */
+  private final case class DeltaBandStats(rows: Long, touched: Seq[Int],
+                                          sigVals: Option[Seq[Long]])
+
+  /** [[DeltaBandStats]] of (bb_bucket, bsig) band rows in one job and
+    * no shuffle: each partition reports its count, its bucket set
+    * (bounded by the index bucket count) and its bsig set, which stops
+    * growing one past the cap (a partition past it puts the union past
+    * it too); the driver merges them. */
+  private def deltaBandStats(dRows: DataFrame): DeltaBandStats = {
+    val cap = PushdownCap
+    val parts = dRows.select(col("bb_bucket"), col("bsig")).rdd
+      .mapPartitions { it =>
+        var n = 0L
+        val bb = scala.collection.mutable.Set.empty[Int]
+        val sv = scala.collection.mutable.Set.empty[Long]
+        it.foreach { r =>
+          n += 1
+          bb += r.getInt(0)
+          if (sv.size <= cap) sv += r.getLong(1)
+        }
+        Iterator((n, bb.toSet, sv.toSet))
+      }.collect()
+    val sigVals = parts.flatMap(_._3).distinct.toSeq
+    DeltaBandStats(parts.map(_._1).sum, parts.flatMap(_._2).distinct.toSeq,
+      Some(sigVals).filter(_.length <= cap))
   }
 
   /** HISTORICAL JUDGMENT REPLAY: judge `delta` against the store AS OF
@@ -1583,12 +1639,11 @@ object Dedup {
     * hashes) - a chunk pays only its own store reads and joins. */
   private def lshJudgeSlice(spark: SparkSession, path: String,
                             dRows: DataFrame, dSh: DataFrame,
+                            dStats: DeltaBandStats,
                             standingSh: => DataFrame,
                             sidecarPresent: Boolean, buckets: Int,
                             threshold: Double,
                             storeDir: (String, String) => DataFrame): DataFrame = {
-    val touched = dRows.select(col("bb_bucket")).distinct()
-      .collect().map(_.getInt(0)).toSeq
     // same two pruning rungs as the sidecar read below: bucket dirs
     // always, plus the delta's band-signature list pushed into the
     // scan when it fits [[PushdownCap]] - the index files are
@@ -1601,11 +1656,9 @@ object Dedup {
     // (pdChunks) so mid-size deltas never get here; only batches past
     // graft.lsh.maxJudgeChunks amortize the unpruned scan instead.
     val idx0 = storeDir("bands", "bb_bucket")
-      .filter(col("bb_bucket").isin(touched: _*))
-    val dSigVals = dRows.select(col("bsig")).distinct()
-      .collect().map(_.getLong(0)).toSeq
-    val idx = if (dSigVals.length <= PushdownCap)
-      idx0.filter(col("bsig").isin(dSigVals: _*)) else idx0
+      .filter(col("bb_bucket").isin(dStats.touched: _*))
+    val idx = dStats.sigVals
+      .fold(idx0)(v => idx0.filter(col("bsig").isin(v: _*)))
     val cand = idx.join(broadcast(dRows), Seq("band", "bsig"))
       .filter(col("id") =!= col("d_id"))
       .select(col("id").as("s_id"), col("d_id")).distinct()
@@ -1617,9 +1670,6 @@ object Dedup {
     val sSh = if (sidecarPresent) {
       // DOC-FOOTPRINT verification: candidate docs' hash sets from their
       // own sidecar buckets - the standing corpus text never opens
-      val db = sIds
-        .select(pmod(col("s_id"), lit(buckets.toLong)).cast("int").as("b"))
-        .distinct().collect().map(_.getInt(0)).toSeq
       // two pruning rungs: directory-level (the candidates' d_buckets)
       // always; and - when the candidate set is bounded - the ids
       // PUSHED DOWN into the parquet scan itself, where the id-sorted
@@ -1635,6 +1685,12 @@ object Dedup {
       // OR-of-equals rather than a min/max range.
       val ids = sIds.limit(PushdownCap + 1)
         .collect().map(_.getLong(0)).toSeq
+      // the candidates' d_buckets: derived from the id list when it is
+      // complete, collected only past the cap
+      val db =
+        if (ids.length <= PushdownCap)
+          ids.map(java.lang.Math.floorMod(_, buckets.toLong).toInt).distinct
+        else docBuckets(sIds, "s_id", buckets)
       val base = storeDir("shingles", "d_bucket")
         .filter(col("d_bucket").isin(db: _*))
       val rows = (if (ids.length <= PushdownCap)

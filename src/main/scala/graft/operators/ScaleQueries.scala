@@ -537,14 +537,11 @@ object ScaleQueries {
     // mutating gate: a private clone of the shared base store
     val store = Fixtures.cloneDir(
       sharedTextStore(spark, dir, versioned = false), "graft-q206-")
-    Dedup.mergeIntoSignatureStore(spark, store,
-      Dedup.minhashSignatures(delta1, "doc_id", "text"), "doc_id")
-    // the ingest flow's sidecar half: delta1's shingle hashes land in
-    // their doc buckets, so judging delta2 verifies delta1 partners
-    // from the sidecar too (standing ∪ delta1 text never re-read)
-    Dedup.mergeShinglesIntoStore(spark, store, delta1, "doc_id", "text")
-    Dedup.mergeIntoBandIndex(spark, store,
-      delta1.select(col("doc_id")), "doc_id")
+    // the ingest flow: signature merge, then the sidecar half (delta1's
+    // shingle hashes land in their doc buckets, so judging delta2
+    // verifies delta1 partners from the sidecar too — standing ∪ delta1
+    // text never re-read), then the band index + inventory merge
+    Dedup.ingestBatchIntoStore(spark, store, delta1, "doc_id", "text")
     Dedup.lshJudgeStore(spark, store, standing.unionByName(delta1),
         delta2, "doc_id", "text")
       .orderBy(col("id_a"), col("id_b"))
@@ -631,11 +628,7 @@ object ScaleQueries {
     // mutating gate: a private clone of the shared VERSIONED base
     val store = Fixtures.cloneDir(
       sharedTextStore(spark, dir, versioned = true), "graft-q220-")
-    Dedup.mergeIntoSignatureStore(spark, store,
-      Dedup.minhashSignatures(delta1, "doc_id", "text"), "doc_id")
-    Dedup.mergeShinglesIntoStore(spark, store, delta1, "doc_id", "text")
-    Dedup.mergeIntoBandIndex(spark, store,
-      delta1.select(col("doc_id")), "doc_id")
+    Dedup.ingestBatchIntoStore(spark, store, delta1, "doc_id", "text")
     val doomed = standing.filter(col("doc_id") % 7 === 3)
       .select(col("doc_id"))
     Dedup.forgetFromBandIndex(spark, store, doomed, "doc_id")

@@ -832,8 +832,7 @@ object Similarity {
     * before listing data files. */
   def readStandingStore(spark: SparkSession, path: String): (DataFrame, Int) = {
     StoreSwap.recover(spark, path)
-    val buckets = spark.read.parquet(path + "/meta")
-      .head.getInt(0)
+    val buckets = StoreSwap.storeBuckets(spark, path)
     (StoreSwap.readDir(spark, path, "data", "c_bucket"), buckets)
   }
 
@@ -849,7 +848,7 @@ object Similarity {
     * in both. */
   def readStandingStoreAt(spark: SparkSession, path: String,
                           version: Int): (DataFrame, Int) = {
-    val buckets = spark.read.parquet(path + "/meta").head.getInt(0)
+    val buckets = StoreSwap.storeBuckets(spark, path)
     (StoreSwap.readVersionedAt(spark, path, "data", "c_bucket", version),
       buckets)
   }
@@ -981,7 +980,7 @@ object Similarity {
         // as-of judgment scaled with the STORE (SemanticReplayProbe
         // first cut: 2.4×/decade vs live 1.07×), exactly the
         // store-size coupling this operator exists to avoid
-        val buckets = spark.read.parquet(path + "/meta").head.getInt(0)
+        val buckets = StoreSwap.storeBuckets(spark, path)
         val touched = d.select(col("__cluster")).distinct()
           .collect().map(_.getLong(0)).toSeq
         val tb = touched
@@ -1030,7 +1029,7 @@ object Similarity {
                             batchId: Option[Long] = None): Unit = {
     val spark = assigned.sparkSession
     StoreSwap.withLease(spark, path) {
-    val buckets = spark.read.parquet(path + "/meta").head.getInt(0)
+    val buckets = StoreSwap.storeBuckets(spark, path)
     StoreSwap.appendDir(spark, path, "data", "c_bucket",
       assigned.withColumn("c_bucket",
         pmod(col(clusterCol), lit(buckets.toLong)).cast("int")),
@@ -1691,7 +1690,7 @@ object Similarity {
                     idCol: String, vecCol: String, m: Int,
                     dsub: Int): Unit = StoreSwap.withLease(spark, path) {
     StoreSwap.recover(spark, path)
-    val buckets = spark.read.parquet(path + "/meta").head.getInt(0)
+    val buckets = StoreSwap.storeBuckets(spark, path)
     // a residual/rotated sidecar's deltas must be encoded the same way
     // — the flavor travels with the sidecar, not the caller. Pin the
     // codebook and flavor to ONE version (versioned sidecars).
@@ -1860,7 +1859,7 @@ object Similarity {
                          opq: Option[Seq[Seq[Double]]] = None,
                          pin: Option[Int] = None,
                          broadcastTables: Boolean = true): DataFrame = {
-    val buckets = spark.read.parquet(storePath + "/meta").head.getInt(0)
+    val buckets = StoreSwap.storeBuckets(spark, storePath)
     val probed = probesM.select(col("qc")).distinct()
       .collect().map(_.getLong(0)).toSeq
     val tb = probed.map(c => (((c % buckets) + buckets) % buckets).toInt)
@@ -2244,7 +2243,7 @@ object Similarity {
     // path (codes absent), never wrongly served — re-run the refresh
     val codesToRefresh =
       if (!StoreSwap.dirExists(spark, path, "pq_codes")) reassigned else {
-      val buckets = spark.read.parquet(path + "/meta").head.getInt(0)
+      val buckets = StoreSwap.storeBuckets(spark, path)
       val fb = freshIds
         .map(c => (((c % buckets) + buckets) % buckets).toInt).distinct
       val present = StoreSwap.readDir(spark, path, "pq_codes", "c_bucket")

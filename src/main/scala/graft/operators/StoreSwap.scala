@@ -3,6 +3,12 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.ColumnIOFactory
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import scala.jdk.CollectionConverters._
 
 /** Crash-atomic bucket rewrite for the partitioned standing stores
   * ([[Similarity.writeStandingStore]]'s embedding store and
@@ -225,14 +231,73 @@ object StoreSwap {
     true
   }
 
+  /** The data files of a parquet directory Spark wrote, partition
+    * subdirectories included (`_SUCCESS`, `.crc` and other `_`/`.`
+    * entries skipped). */
+  private def parquetFiles(fs: FileSystem, dir: Path): Seq[Path] =
+    fs.listStatus(dir).toSeq
+      .filterNot(s => s.getPath.getName.startsWith("_") ||
+        s.getPath.getName.startsWith("."))
+      .flatMap(s => if (s.isDirectory) parquetFiles(fs, s.getPath)
+        else Seq(s.getPath))
+
+  /** Open one parquet file's footer on the driver and apply `f`. */
+  private def footer[T](spark: SparkSession, p: Path)
+                       (f: ParquetFileReader => T): T = {
+    val r = ParquetFileReader.open(
+      HadoopInputFile.fromPath(p, spark.sparkContext.hadoopConfiguration))
+    try f(r) finally r.close()
+  }
+
+  /** The one row of a store-constants sidecar (`$path/meta`,
+    * `bands_meta`, `shingles_meta`, ...), column name → value, read
+    * with parquet-hadoop on the driver: no Spark job, where a
+    * `spark.read.parquet(dir).head` costs two (schema inference, then
+    * the row). INT columns only — the sidecars hold layout constants.
+    * Fails naming `dir` when the sidecar is missing or does not hold
+    * exactly one row, and on lookup of a column it lacks: a store whose
+    * constants are unreadable must not be judged or mutated under
+    * guessed ones. */
+  def readConstants(spark: SparkSession, dir: String): Map[String, Int] = {
+    val p = new Path(dir)
+    val fs = fsOf(spark, p)
+    if (!fs.exists(p))
+      sys.error(s"store constants sidecar $dir is missing")
+    val files = parquetFiles(fs, p)
+    val counts = files.map(footer(spark, _)(_.getRecordCount))
+    if (counts.sum != 1L)
+      sys.error(s"store constants sidecar $dir holds ${counts.sum} rows" +
+        " (exactly 1 expected)")
+    footer(spark, files(counts.indexOf(1L))) { r =>
+      val schema = r.getFooter.getFileMetaData.getSchema
+      val rec = new ColumnIOFactory().getColumnIO(schema)
+        .getRecordReader(r.readNextRowGroup(),
+          new GroupRecordConverter(schema))
+        .read()
+      schema.getFields.asScala.zipWithIndex.map { case (f, i) =>
+        val t = f.asPrimitiveType.getPrimitiveTypeName
+        if (t != PrimitiveTypeName.INT32)
+          sys.error(s"store constants sidecar $dir: column ${f.getName}" +
+            s" is $t, not INT32")
+        f.getName -> rec.getInteger(i, 0)
+      }.toMap.withDefault(name =>
+        sys.error(s"store constants sidecar $dir has no '$name' column"))
+    }
+  }
+
+  /** The bucket count a standing store (signature or embedding)
+    * records in its `meta` sidecar. */
+  def storeBuckets(spark: SparkSession, path: String): Int =
+    readConstants(spark, path + "/meta")("buckets")
+
   /** Crash-atomic rewrite of the `touched` buckets of `$path/$dataDir`
     * (default `data`; the PQ code sidecar passes `pq_codes`). `slice`
     * must be the full replacement content for those buckets and carry
     * `partCol`; buckets of `touched` absent from `slice` are emptied
     * (their directories dropped at swap). Returns the staged row count
-    * (= rows the touched buckets hold after the swap), read from
-    * parquet metadata, so callers can derive deleted-row counts without
-    * evaluating `slice` twice. */
+    * (= rows the touched buckets hold after the swap), summed from the
+    * staged files' parquet footers on the driver, so callers can derive
+    * deleted-row counts without evaluating `slice` twice. */
   def stagedRewrite(spark: SparkSession, path: String, partCol: String,
                     touched: Seq[Int], slice: DataFrame,
                     sortCols: Seq[Column],
@@ -248,11 +313,10 @@ object StoreSwap {
     val stagedBuckets = fs.listStatus(stg)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(partCol + "="))
       .map(_.getPath.getName.stripPrefix(partCol + "=").toInt).toSet
-    // a rewrite that empties EVERY touched bucket stages no data files at
-    // all (just _SUCCESS) — parquet can't infer a schema from that, and
-    // the answer is simply 0
-    val kept = if (stagedBuckets.isEmpty) 0L
-      else spark.read.parquet(stg.toString).count() // metadata-only
+    // a rewrite that empties EVERY touched bucket stages no data files
+    // at all, so the footer sum is 0 with nothing to open
+    val kept = parquetFiles(fs, stg)
+      .map(footer(spark, _)(_.getRecordCount)).sum
     if (dataDirVersioned(spark, path, dataDir)) {
       // reader-atomic commit path: staged buckets become an immutable
       // generation, visibility flips with one manifest rename, emptied

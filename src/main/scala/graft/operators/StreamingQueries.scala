@@ -910,12 +910,7 @@ object StreamingQueries {
           // then absorb it: signature MIN-merge, shingle sidecar
           // replace-merge (so the NEXT batch's verification reads this
           // one's docs from their buckets), index + inventory merge
-          Dedup.mergeIntoSignatureStore(s, store,
-            Dedup.minhashSignatures(b, "doc_id", "text"), "doc_id")
-          Dedup.mergeShinglesIntoStore(s, store, b, "doc_id", "text")
-          Dedup.mergeIntoBandIndex(s, store,
-            b.select(col("doc_id")), "doc_id")
-          () // foreachBatch wants Unit
+          Dedup.ingestBatchIntoStore(s, store, b, "doc_id", "text")
         } finally b.unpersist()
       }
       .option("checkpointLocation", tmp.resolve("cp").toString)
