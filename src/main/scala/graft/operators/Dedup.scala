@@ -696,11 +696,11 @@ object Dedup {
     * Bucket count rides in a `meta` sidecar (same contract as the
     * embedding store's [[Similarity.writeStandingStore]]). */
   /** `$path/$dataDir` as a DataFrame under either commit protocol:
-    * versioned stores ([[StoreSwap.isVersioned]]) resolve through the
-    * latest committed manifest — an atomic SNAPSHOT, immune to
-    * concurrent mutation — while legacy stores list the live dir.
-    * Filters on `partCol` prune files in both modes (the partition
-    * column infers from the dir names either way). */
+    * versioned stores ([[StoreSwap.isUnified]]) resolve through the
+    * current store manifest — an atomic SNAPSHOT, immune to concurrent
+    * mutation — while legacy stores list the live dir. Filters on
+    * `partCol` prune files in both modes (the partition column infers
+    * from the dir names either way). */
   private def dirDf(spark: SparkSession, path: String, dataDir: String,
                     partCol: String): DataFrame =
     StoreSwap.readDir(spark, path, dataDir, partCol)
@@ -712,23 +712,25 @@ object Dedup {
     StoreSwap.dirExists(spark, path, dataDir)
 
   /** Full write of a store dataDir under the store's commit protocol
-    * (writers auto-follow a versioned store; `forceVersioned` starts
-    * one). */
+    * (writers auto-follow a versioned store; `forceVersioned` makes the
+    * store's first commit). */
   private def writeDir(spark: SparkSession, path: String, dataDir: String,
                        partCol: String, df: DataFrame, sortCols: Seq[Column],
                        forceVersioned: Boolean = false): Unit =
     StoreSwap.overwriteDir(spark, path, dataDir, partCol, df, sortCols,
       forceVersioned)
 
-  /** @param versioned start the store on the versioned-manifest commit
-    *                  protocol ([[StoreSwap]]'s snapshot mode): every
-    *                  later mutation of data/bands/bands_inv/shingles
-    *                  commits reader-atomically (a concurrent reader
-    *                  sees the old or the new complete store, never a
-    *                  missing bucket), at the cost of manifest
-    *                  indirection on reads. Legacy (default) keeps the
-    *                  in-place bucket swap, whose swap instant requires
-    *                  a maintenance window for readers. */
+  /** @param versioned start the store on [[StoreSwap]]'s unified
+    *                  manifest: every later mutation of data/bands/
+    *                  bands_inv/shingles commits reader-atomically (a
+    *                  concurrent reader sees the old or the new complete
+    *                  store, never a missing bucket), composed mutations
+    *                  publish as one version, and any retained version
+    *                  is a consistent snapshot of the whole store (what
+    *                  [[lshJudgeStoreAt]] replays) — at the cost of
+    *                  manifest indirection on reads. Legacy (default)
+    *                  keeps the in-place bucket swap, whose swap instant
+    *                  requires a maintenance window for readers. */
   def writeSignatureStore(sigs: DataFrame, path: String, idCol: String,
                           buckets: Int = 64,
                           versioned: Boolean = false): Unit = {
@@ -792,19 +794,22 @@ object Dedup {
     * content-harmless; what the ledger adds is the SKIP — an acked
     * batchId returns before `deltaDocs` is even evaluated, so a
     * redelivered batch costs one manifest read instead of three
-    * store mutations. Ack ordering: merges first,
-    * [[StoreSwap.ackBatch]] LAST — a crash between them re-runs the
-    * idempotent merges on redelivery and THEN acks; a crash after the
-    * ack skips outright. Requires the store's data dir on the
-    * versioned protocol when `batchId` is used. */
+    * store mutations. On a versioned store the three merges and the
+    * ack ([[StoreSwap.ackBatch]]) are ONE [[StoreSwap.transact]]: a
+    * crash anywhere inside leaves the store at its pre-batch version
+    * with the batch unacked, so redelivery re-runs from scratch against
+    * unchanged state; a crash after the commit skips outright. The
+    * ledger needs a versioned store, so `batchId` is refused on a
+    * legacy one. */
   def ingestBatchIntoStore(spark: SparkSession, path: String,
                            deltaDocs: DataFrame, idCol: String,
                            textCol: String,
                            batchId: Option[Long] = None,
                            n: Int = 3, numHashes: Int = 16): Unit =
     StoreSwap.withLease(spark, path) {
+    val versioned = StoreSwap.isUnified(spark, path)
     if (batchId.isDefined)
-      require(StoreSwap.dataDirVersioned(spark, path, "data"),
+      require(versioned,
         s"$path is not versioned: the batch ledger needs the manifest" +
           " commit protocol (writeSignatureStore with versioned = true)")
     if (batchId.exists(
@@ -828,43 +833,11 @@ object Dedup {
           buckets, touched)
       batchId.foreach(StoreSwap.ackBatch(spark, path, "data", _))
     }
-    // a UNIFIED store upgrades the composed flow from idempotence+
-    // ack-last to a real transaction: the three merges AND the ledger
-    // ack publish in ONE manifest rename — a crash anywhere inside
-    // leaves the store at its pre-batch version with the batch
-    // unacked, so redelivery re-runs from scratch against unchanged
-    // state. Per-dataDir stores keep the ack-last protocol (each merge
-    // commits separately; idempotence covers the gaps).
-    if (StoreSwap.isUnified(spark, path))
-      StoreSwap.transact(spark, path) { run() }
+    // versioned: the three merges AND the ledger ack publish in ONE
+    // manifest rename. Legacy stores commit each merge separately;
+    // idempotence covers the gaps.
+    if (versioned) StoreSwap.transact(spark, path) { run() }
     else run()
-  }
-
-  /** Migrate a signature store (and every serving structure it
-    * carries) to [[StoreSwap]]'s UNIFIED manifest: `data`, `bands`,
-    * `bands_inv`, and `shingles` stop versioning independently and
-    * every commit — including [[ingestBatchIntoStore]]'s composed
-    * three-merge ingest, which becomes a single-rename transaction —
-    * publishes one store-wide snapshot. Any retained version is then
-    * a CONSISTENT state of the whole store, which is what makes
-    * [[lshJudgeStoreAt]]'s historical judgment replay exact. */
-  def unifySignatureStore(spark: SparkSession, path: String): Unit = {
-    // seed the versioned layout record from the live sidecar INTO the
-    // migration manifest: a band index built BEFORE migration thereby
-    // gets its constants pinned at the cutover, so historical
-    // judgments of the migration snapshot survive a later rebuild
-    // under a different graft.lsh.bandIndexBuckets (bandsMetaAt would
-    // otherwise have to fail fast on those versions)
-    val bm = new org.apache.hadoop.fs.Path(path + "/bands_meta")
-    val seed =
-      if (bm.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .exists(bm)) {
-        val (b, r, ib) =
-          bandsMeta(spark, path, StoreSwap.storeBuckets(spark, path))
-        bandsMetaEntries(b, r, ib)
-      } else Map.empty[String, Seq[Long]]
-    StoreSwap.unifyVersioning(spark, path,
-      Seq("data", "bands", "bands_inv", "shingles"), seedMeta = seed)
   }
 
   /** The full signature store plus its recorded bucket count, with any
@@ -885,24 +858,22 @@ object Dedup {
       .distinct().collect().map(_.getInt(0)).toSeq.sorted
 
   /** TIME-TRAVEL read of a VERSIONED signature store — the text twin
-    * of [[Similarity.readStandingStoreAt]]: any retained manifest
-    * version of the data resolves to a complete historical snapshot
-    * (retention = `graft.store.snapshotKeep`). Band index, inventory,
-    * and shingle sidecar version independently (own manifests per
-    * dataDir), so a historical JUDGMENT replay should rebuild those
-    * from the pinned signatures; this read serves the signature state
-    * itself — audits, diffs, forget verification. Schema-equal to
-    * [[readSignatureStore]]: the `d_bucket` partition column is kept
-    * in both. */
+    * of [[Similarity.readStandingStoreAt]]: any retained store version
+    * resolves to a complete historical snapshot of the signatures
+    * (retention = `graft.store.snapshotKeep`) — audits, diffs, forget
+    * verification. A historical JUDGMENT replay is
+    * [[lshJudgeStoreAt]], which pins the band index and sidecar at the
+    * same version. Schema-equal to [[readSignatureStore]]: the
+    * `d_bucket` partition column is kept in both. */
   def readSignatureStoreAt(spark: SparkSession, path: String,
                            version: Int): (DataFrame, Int) =
     (StoreSwap.readVersionedAt(spark, path, "data", "d_bucket", version),
       StoreSwap.storeBuckets(spark, path))
 
-  /** Retained (readable) manifest versions of a versioned signature
-    * store's data, ascending; last = live. */
+  /** Retained (readable) versions of a versioned signature store,
+    * ascending; last = live. */
   def signatureStoreVersions(spark: SparkSession, path: String): Seq[Int] =
-    StoreSwap.snapshotVersions(spark, path, "data")
+    StoreSwap.snapshotVersions(spark, path)
 
   /** MANIFEST-PRUNED CDC for the SIGNATURE store — the text twin of
     * [[Similarity.standingStoreDiff]]: a doc-level change feed between
@@ -1143,7 +1114,7 @@ object Dedup {
     // store bucket count below it (= r14's measured best at 50k/500k),
     // scaling as docs/125k past ≥500M docs per the recorded break-even.
     // The manual knob stays as override. Recorded in bands_meta (and,
-    // on unified stores, the pinned manifest) so every later mutation/
+    // on versioned stores, the pinned manifest) so every later mutation/
     // judgment derives the same layout.
     val nDocs = aggRow.getLong(1) / numHashes // one row per (doc, k)
     val idxBuckets = spark.conf.getOption("graft.lsh.bandIndexBuckets")
@@ -1171,7 +1142,7 @@ object Dedup {
     spark.range(1).select(lit(bands).as("bands"),
         lit(r).as("rows_per_band"), lit(idxBuckets).as("idx_buckets"))
       .write.mode("overwrite").parquet(path + "/bands_meta")
-    // On unified stores the layout constants ALSO version through the
+    // On versioned stores the layout constants ALSO version through the
     // manifest (same rename as the band rows, via withLeaseAtomic): a
     // historical judgment resolves bands/r/idx_buckets from its pinned
     // version, so a rebuild under a different graft.lsh.bandIndexBuckets
@@ -1209,15 +1180,11 @@ object Dedup {
   private val RowsPerBandKey = "bands.r"
   private val IdxBucketsKey = "bands.idx"
 
-  private def bandsMetaEntries(bands: Int, r: Int,
-                               idxBuckets: Int): Map[String, Seq[Long]] =
-    Map(BandsKey -> Seq(bands.toLong), RowsPerBandKey -> Seq(r.toLong),
-      IdxBucketsKey -> Seq(idxBuckets.toLong))
-
   private def putBandsMeta(spark: SparkSession, path: String,
                            bands: Int, r: Int, idxBuckets: Int): Unit =
     StoreSwap.putStoreMeta(spark, path,
-      bandsMetaEntries(bands, r, idxBuckets))
+      Map(BandsKey -> Seq(bands.toLong), RowsPerBandKey -> Seq(r.toLong),
+        IdxBucketsKey -> Seq(idxBuckets.toLong)))
 
   /** Whether `path` carries the per-doc band inventory (indexes built
     * before it existed lack one until the next [[writeBandIndex]]). */
@@ -1251,10 +1218,9 @@ object Dedup {
     * `graft.lsh.bandIndexBuckets` inside the retention window rewrites
     * the live sidecar, and deriving delta `bb_bucket`s from it against
     * band rows PINNED under the old layout silently drops candidates.
-    * A pinned manifest that predates the first recorded layout falls
-    * back to the live sidecar only when NO retained manifest carries a
-    * record (index never rebuilt since the recording began — live
-    * still describes the pinned rows); otherwise it fails fast. */
+    * Every index build records its layout in the same version as its
+    * band rows, so a pinned manifest without a record predates the
+    * index and fails fast. */
   private def bandsMetaAt(spark: SparkSession, path: String,
                           storeBuckets: Int,
                           asOf: Option[Int]): (Int, Int, Int) =
@@ -1265,16 +1231,9 @@ object Dedup {
          StoreSwap.storeMetaAt(spark, path, IdxBucketsKey, Some(v))) match {
           case (Some(Seq(b)), Some(Seq(r)), Some(Seq(ib))) =>
             (b.toInt, r.toInt, ib.toInt)
-          case _ =>
-            require(!StoreSwap.storeMetaRecordedEver(spark, path,
-                BandsKey),
-              s"$path: the band index was rebuilt AFTER version $v (a" +
-                " later retained manifest records layout constants this" +
-                " one lacks) - the live bands_meta may not describe the" +
-                " pinned band rows, so this replay would silently drop" +
-                " candidates. Re-pin at a post-rebuild version or" +
-                " restore the pre-rebuild index from archive")
-            bandsMeta(spark, path, storeBuckets)
+          case _ => throw new IllegalArgumentException(
+            s"$path has no band index at version $v (the index was" +
+              " built AFTER it) - re-pin at a later version")
         }
       case None => bandsMeta(spark, path, storeBuckets)
     }
@@ -1476,9 +1435,9 @@ object Dedup {
                     threshold: Double = 0.5,
                     asOf: Option[Int] = None): DataFrame = {
     require(asOf.isEmpty || StoreSwap.isUnified(spark, path),
-      s"$path: historical judgment (asOf) needs the UNIFIED manifest -" +
-        " per-dataDir versions pin signatures only (bands and sidecar" +
-        " version independently); migrate with unifySignatureStore")
+      s"$path: historical judgment (asOf) needs a versioned store" +
+        " (writeSignatureStore with versioned = true) - a legacy store" +
+        " keeps no history")
     // a judgment-only process must also roll forward a crashed index
     // mutation's committed swap, or it serves stale band rows
     StoreSwap.recover(spark, path)
@@ -1616,12 +1575,11 @@ object Dedup {
   }
 
   /** HISTORICAL JUDGMENT REPLAY: judge `delta` against the store AS OF
-    * retained unified version `version` - the band index AND the
-    * shingle sidecar resolve from the SAME pinned manifest, so the
-    * verdicts are bit-exactly what [[lshJudgeStore]] returned when
-    * that version was live (the consistency the unified manifest
-    * exists for; per-dataDir versioning cannot offer this - its
-    * time-travel pins signatures only). Audits, incident replay,
+    * retained version `version` of a versioned store - the band index
+    * AND the shingle sidecar resolve from the SAME pinned manifest as
+    * the signatures, so the verdicts are bit-exactly what
+    * [[lshJudgeStore]] returned when that version was live. Audits,
+    * incident replay,
     * "what would yesterday's corpus have said about this batch". */
   def lshJudgeStoreAt(spark: SparkSession, path: String,
                       delta: DataFrame, idCol: String, textCol: String,

@@ -42,11 +42,15 @@ object Lineage {
   /** Session conf key selecting the cut mechanism (see class doc). */
   val ModeKey = "graft.plan.cuts"
 
+  /** Cut `df` per the session's [[ModeKey]]; an unknown mode fails
+    * naming the value rather than silently checkpointing. */
   def cut(df: DataFrame): DataFrame =
     df.sparkSession.conf.get(ModeKey, "checkpoint") match {
-      case "off"     => df
-      case "persist" => df.persist(StorageLevel.MEMORY_AND_DISK)
-      case _         => df.localCheckpoint(false)
+      case "off"        => df
+      case "persist"    => df.persist(StorageLevel.MEMORY_AND_DISK)
+      case "checkpoint" => df.localCheckpoint(false)
+      case other => throw new IllegalArgumentException(
+        s"$ModeKey must be checkpoint, persist or off, got '$other'")
     }
 
   /** Chain-friendly syntax: `relation.planCut` ≡ `Lineage.cut(relation)`. */

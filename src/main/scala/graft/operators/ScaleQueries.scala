@@ -659,9 +659,9 @@ object ScaleQueries {
         concat(lit("zzz qqq xyz "), col("text")).as("text"))
     // mutating gate: a private clone of the shared VERSIONED base —
     // its band index and sidecar are extra state the diff never reads
-    // (signatureStoreDiff compares data manifests only); the forget
-    // additionally rewrites the sidecar's doomed buckets, which does
-    // not touch data's version line
+    // (signatureStoreDiff compares data entries only); the forget
+    // additionally rewrites the sidecar's doomed buckets in the same
+    // store version
     val store = Fixtures.cloneDir(
       sharedTextStore(spark, dir, versioned = true), "graft-q226-")
     spark.conf.set("graft.store.snapshotKeep", "8")
@@ -680,16 +680,15 @@ object ScaleQueries {
     } finally spark.conf.unset("graft.store.snapshotKeep")
   }
 
-  /** q227: HISTORICAL JUDGMENT REPLAY over the UNIFIED text store —
-    * what the per-dataDir protocol cannot do: `data`, `bands`,
-    * `bands_inv`, and `shingles` pin TOGETHER under one retained
-    * `store.v<N>` manifest ([[graft.operators.StoreSwap
-    * .unifyVersioning]]), so judging a batch AS OF a version replays
+  /** q227: HISTORICAL JUDGMENT REPLAY over the VERSIONED text store —
+    * `data`, `bands`, `bands_inv`, and `shingles` pin TOGETHER under
+    * one retained `store.v<N>` manifest ([[graft.operators.StoreSwap]]'s
+    * unified manifest), so judging a batch AS OF a version replays
     * the verdicts that version's live judgment produced, bit-exactly.
     * The gate ingests delta1 through the composed exactly-once flow —
-    * which on a unified store is a REAL transaction: three merges plus
-    * the ledger ack in ONE manifest rename ([[graft.operators.StoreSwap
-    * .transact]]) — then judges delta2 as of the PRE-ingest version;
+    * a REAL transaction: three merges plus the ledger ack in ONE
+    * manifest rename ([[graft.operators.StoreSwap.transact]]) — then
+    * judges delta2 as of the PRE-ingest version;
     * the oracle replays the judgment against the original standing
     * corpus only. A leaked delta1 band row, sidecar row, or signature
     * breaks the hash. */
@@ -698,11 +697,9 @@ object ScaleQueries {
     val standing = docs.select(col("doc_id"), col("text"))
     val delta1 = nearDupDelta(standing, 3, 100000L, 1)
     val delta2 = nearDupDelta(standing, 5, 200000L, 2)
-    // mutating gate: a private clone of the shared VERSIONED base,
-    // migrated to the unified manifest (the migration itself mutates)
+    // mutating gate: a private clone of the shared VERSIONED base
     val store = Fixtures.cloneDir(
       sharedTextStore(spark, dir, versioned = true), "graft-q227-")
-    Dedup.unifySignatureStore(spark, store)
     spark.conf.set("graft.store.snapshotKeep", "8")
     try {
       val v0 = Dedup.signatureStoreVersions(spark, store).last

@@ -546,8 +546,7 @@ object SelectionQueries {
     * pruning bug that drops or leaks a cluster ALSO breaks the hash —
     * the flat-per-decade read SemanticReplayProbe measures is the
     * gated path. Pruned ≡ unpruned equivalence is spec-gated in
-    * StandingStoreSpec; the per-dataDir refusal (codebook and data
-    * versioning independently cannot pin together) likewise. */
+    * StandingStoreSpec; the legacy-store refusal likewise. */
   def q229SemanticReplay(spark: SparkSession, dir: String): DataFrame = {
     def emb() = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"))
@@ -565,7 +564,6 @@ object SelectionQueries {
     Similarity.writeStandingStore(assigned(base, cents), store, "cluster",
       buckets = 8, versioned = true)
     Similarity.writeCodebook(spark, store, cents)
-    Similarity.unifyStandingStore(spark, store)
     spark.conf.set("graft.store.snapshotKeep", "8")
     try {
       val v0 = Similarity.standingStoreVersions(spark, store).last
@@ -627,10 +625,11 @@ object SelectionQueries {
     Similarity.writeStandingStore(assigned(base, cents), store, "cluster",
       buckets = 8, versioned = true)
     Similarity.writeCodebook(spark, store, cents)
-    Similarity.unifyStandingStore(spark, store)
-    // non-vacuity: with fewer delta rows than buckets, the touched
-    // bucket set is a proper subset — the prune must actually prune
-    require(sparse.count() < 8,
+    // non-vacuity: with at least one but fewer delta rows than buckets,
+    // the touched bucket set is a non-empty proper subset — the prune
+    // must actually prune (an empty delta would judge nothing)
+    val nSparse = sparse.count()
+    require(nSparse >= 1 && nSparse < 8,
       "q231's delta must stay cluster-sparse (fewer rows than buckets)" +
         " or the pruned-read gate degenerates to q229's full read")
     spark.conf.set("graft.store.snapshotKeep", "8")
@@ -1303,9 +1302,8 @@ object SelectionQueries {
   }
 
   /** q228: IVF-PQ SEARCH THROUGH THE UNIFIED TRIPLE — q199's search
-    * run end-to-end on the UNIFIED protocol: the store is versioned
-    * and migrated ([[Similarity.unifyStandingStore]]), the sidecar's
-    * codebook/meta/codes commit as versioned dataDirs in ONE
+    * run end-to-end on the unified manifest: the store is versioned,
+    * the sidecar's codebook/meta/codes commit as manifest dataDirs in ONE
     * [[graft.operators.StoreSwap.transact]] manifest rename, and the
     * search resolves all three artifacts AT ONE PINNED STORE VERSION
     * ([[Similarity.pqTopKStore]] via pqPin) — the reader-atomic
@@ -1327,7 +1325,6 @@ object SelectionQueries {
         .withColumn("nrm", Similarity.norm(col("embedding"))),
       store, "cluster", buckets = 8, versioned = true)
     Similarity.writeCodebook(spark, store, cents)
-    Similarity.unifyStandingStore(spark, store)
     Similarity.writePqSidecar(spark, store, "vec_id", "embedding",
       m = 4, dsub = 16, ksub = 8, residual = true)
     Similarity.writePqSidecar(spark, store, "vec_id", "embedding",

@@ -797,18 +797,15 @@ object Similarity {
     * exactly what [[semDedupIncrementalPrepped]] consumes; parquet
     * round-trips floats/doubles/longs bit-exactly, so verdicts through
     * the store equal the in-memory path's (q187 gates this). */
-  /** @param versioned start `data` on [[StoreSwap]]'s versioned-manifest
-    *                  commit protocol: every later rewrite/append of the
-    *                  data commits reader-atomically (old or new complete
-    *                  snapshot, never a mid-swap hole). The PQ sidecar's
-    *                  three artifacts keep their own `_pending_pq`
-    *                  crash-atomic swap on per-dataDir stores (splitting
-    *                  `pq_codes` into a SEPARATE manifest would reopen the
-    *                  codebook/codes split-brain that protocol closes);
-    *                  on a UNIFIED store ([[unifyStandingStore]]) the
-    *                  triple instead commits inside one
-    *                  [[StoreSwap.transact]] manifest rename — reader-
-    *                  atomic, no maintenance window. */
+  /** @param versioned start the store on [[StoreSwap]]'s unified
+    *                  manifest: every later rewrite/append of the data,
+    *                  the coarse codebook and the PQ sidecar commits
+    *                  reader-atomically (old or new complete snapshot,
+    *                  never a mid-swap hole), and any retained version
+    *                  pins members and codebook together (what
+    *                  [[semanticJudgeStoreAt]] replays). Legacy stores
+    *                  keep the in-place bucket swap, and the PQ triple
+    *                  its own `_pending_pq` crash-atomic swap. */
   def writeStandingStore(assigned: DataFrame, path: String,
                          clusterCol: String = "cluster",
                          buckets: Int = 64,
@@ -853,43 +850,10 @@ object Similarity {
       buckets)
   }
 
-  /** Retained (readable) manifest versions of a versioned standing
-    * store's data, ascending; last = the live version. */
+  /** Retained (readable) versions of a versioned standing store,
+    * ascending; last = the live version. */
   def standingStoreVersions(spark: SparkSession, path: String): Seq[Int] =
-    StoreSwap.snapshotVersions(spark, path, "data")
-
-  /** Migrate an embedding standing store to [[StoreSwap]]'s UNIFIED
-    * manifest. `data` migrates directly; a legacy COARSE CODEBOOK is
-    * re-committed as a versioned dataDir in the same maintenance
-    * window (migration already holds the lease and is the documented
-    * offline cutover), so from then on codebook updates version WITH
-    * the memberships they assign — the consistency
-    * [[semanticJudgeStoreAt]]'s historical replay needs (a refit's new
-    * centroids must never be applied to a pinned version's members).
-    * A legacy PQ sidecar keeps serving through its `_pending_pq`
-    * protocol until the next [[writePqSidecar]], which rewrites the
-    * triple as versioned dataDirs committed in ONE
-    * [[StoreSwap.transact]] rename — from then on sidecar rewrites are
-    * reader-atomic (a concurrent flavored read pins codebook, meta,
-    * and codes at one store version via [[pqPin]] and can never
-    * observe a mixed triple). */
-  def unifyStandingStore(spark: SparkSession, path: String): Unit = {
-    StoreSwap.unifyVersioning(spark, path, Seq("data"))
-    val legacy = new org.apache.hadoop.fs.Path(path + "/codebook")
-    val fs = legacy.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(legacy)) {
-      if (!codebookVersioned(spark, path)) {
-        val rows = spark.read.parquet(path + "/codebook")
-          .select(col("cid"), col("cent")).localCheckpoint(true)
-        writeCodebookDf(spark, path, rows) // versioned from here on
-      }
-      // idempotent cleanup even when the codebook is ALREADY versioned:
-      // a crash between writeCodebookDf's commit and this delete would
-      // otherwise leave the stale legacy dir permanently (the re-run
-      // used to skip the whole branch once codebookVersioned was true)
-      fs.delete(legacy, true)
-    }
-  }
+    StoreSwap.snapshotVersions(spark, path)
 
   /** MANIFEST-PRUNED CDC between two retained versions of a versioned
     * standing store: (change, vec_id, cluster) rows where `change` is
@@ -931,15 +895,13 @@ object Similarity {
 
   /** HISTORICAL SEMANTIC JUDGMENT — [[Dedup.lshJudgeStoreAt]]'s
     * embedding twin: incremental semantic dedup of `delta` AS OF a
-    * retained unified-store `version`, with the CODEBOOK and the
-    * MEMBERS both resolved from that ONE pinned manifest. The hazard
-    * this closes is artifacts straddling a commit: on a per-dataDir
-    * store the codebook and the data version independently, so "judge
-    * as of yesterday" can silently apply today's refit centroids to
+    * retained `version` of a versioned store, with the CODEBOOK and
+    * the MEMBERS both resolved from that ONE pinned manifest. The
+    * hazard this closes is artifacts straddling a commit: "judge as of
+    * yesterday" must never apply today's refit centroids to
     * yesterday's members (different assignments → different
-    * co-membership → different verdicts). Requires the store unified
-    * AND its codebook migrated ([[unifyStandingStore]]); per-dataDir
-    * stores are REFUSED rather than given a best-effort answer.
+    * co-membership → different verdicts). Legacy stores keep no history
+    * and are REFUSED rather than given a best-effort answer.
     * Verdict contract identical to [[semDedupIncrementalAssigned]]:
     * (idCol, cluster, keep) per delta row. Delta-footprint at scale:
     * the pinned members prune by the delta's clusters exactly like the
@@ -956,11 +918,10 @@ object Similarity {
                            vecCol: String, version: Int, minCos: Double,
                            pruneBaseByDeltaClusters: Boolean = true)
       : DataFrame = {
-    require(StoreSwap.isUnified(spark, path) &&
-      codebookVersioned(spark, path),
-      s"$path versions its codebook and data independently — a" +
-        " historical judgment cannot pin both; migrate with" +
-        " unifyStandingStore to the UNIFIED manifest first")
+    require(StoreSwap.isUnified(spark, path),
+      s"$path: historical judgment needs a versioned store" +
+        " (writeStandingStore with versioned = true) — a legacy store" +
+        " keeps no history")
     val cents = readCodebookAt(spark, path, version)
     val d = delta.select(col(idCol), col(vecCol))
       .withColumn("__cluster",
@@ -1052,8 +1013,8 @@ object Similarity {
         .toDF("cid", "cent"))
   }
 
-  /** The codebook write under the store's commit protocol: a versioned
-    * dataDir on unified stores (so codebook updates version WITH the
+  /** The codebook write under the store's commit protocol: a manifest
+    * dataDir on versioned stores (so codebook updates version WITH the
     * members they assign — one manifest rename inside an enclosing
     * [[StoreSwap.transact]], and historical judgment can pin both at
     * one version), the legacy write-once dir otherwise. The constant
@@ -1064,25 +1025,17 @@ object Similarity {
                               df: DataFrame): Unit =
     if (StoreSwap.isUnified(spark, path))
       StoreSwap.overwriteDir(spark, path, "codebook", "part",
-        df.withColumn("part", lit(0)), Seq(col("cid")),
-        forceVersioned = true)
+        df.withColumn("part", lit(0)), Seq(col("cid")))
     else
       df.coalesce(1).write.mode("overwrite").parquet(path + "/codebook")
 
-  /** Whether the store's coarse codebook commits through the unified
-    * manifest (migrated by [[unifyStandingStore]] or first written
-    * after unification). */
-  private def codebookVersioned(spark: SparkSession, path: String): Boolean =
-    StoreSwap.isUnified(spark, path) &&
-      StoreSwap.latestSnapshot(spark, path, "codebook").isDefined
-
   /** The codebook relation (cid, cent) under the store's protocol,
-    * pinned to store version `pin` when given (unified stores only —
+    * pinned to store version `pin` when given (versioned stores only —
     * the consistency point of [[semanticJudgeStoreAt]] and the
     * residual ADC path). */
   private def codebookDf(spark: SparkSession, path: String,
                          pin: Option[Int] = None): DataFrame =
-    if (codebookVersioned(spark, path)) pin match {
+    if (StoreSwap.isUnified(spark, path)) pin match {
       case Some(v) =>
         StoreSwap.readVersionedAt(spark, path, "codebook", "part", v)
           .drop("part")
@@ -1102,7 +1055,7 @@ object Similarity {
       .orderBy(col("cid")).collect()
       .map(_.getSeq[Double](1).toSeq).toSeq
 
-  /** The codebook AS OF a pinned unified-store version — the model
+  /** The codebook AS OF a pinned store version — the model
     * half of a historical judgment: assignments replayed at `version`
     * must use the centroids that version's live judgments used, not
     * the latest refit's. */
@@ -1236,7 +1189,7 @@ object Similarity {
     * under a new flavor marker, old codes under a new codebook) serves
     * silently wrong distances. Two protocols, by store mode:
     *
-    *  - '''Legacy / per-dataDir-versioned stores''': [[writePqSidecar]]
+    *  - '''Legacy stores''': [[writePqSidecar]]
     *    stages all three under dot-dirs (invisible to readers), commits
     *    with one marker-file create, and swaps each with one rename;
     *    [[pqRecover]] — called by every sidecar read/mutation entry —
@@ -1246,37 +1199,24 @@ object Similarity {
     *    post-commit renames are NOT reader-atomic, so concurrent reads
     *    during a sidecar rewrite need a maintenance window (the store
     *    contract already excludes them).
-    *  - '''UNIFIED stores''' ([[StoreSwap.unifyVersioning]]): the three
-    *    artifacts are ordinary versioned dataDirs committed inside ONE
+    *  - '''Versioned stores''' (the unified manifest): the three
+    *    artifacts are ordinary manifest dataDirs committed inside ONE
     *    [[StoreSwap.transact]] — a single manifest rename publishes the
     *    whole triple, and every flavored read resolves codebook, meta,
     *    and codes AT ONE PINNED STORE VERSION ([[pqPin]]), so a reader
     *    racing the rewrite sees the old or the new TRIPLE, never a mix:
-    *    fully reader-atomic, no maintenance window. The ONE-TIME
-    *    cutover rewrite of a store unified after its sidecar was built
-    *    is the exception: it leaves the legacy dirs in place (readers
-    *    that resolved them pre-commit finish safely) and the NEXT
-    *    rewrite retires them — a reader still running across both
-    *    rewrites falls under the legacy maintenance-window contract it
-    *    started under. The codebook and meta gain a constant `part=0`
-    *    partition column (the versioned reader infers partition
-    *    columns from dir names; harmless to every consumer). */
+    *    fully reader-atomic, no maintenance window. The codebook and
+    *    meta gain a constant `part=0` partition column (the versioned
+    *    reader infers partition columns from dir names; harmless to
+    *    every consumer). */
   private val PqSidecarDirs = Seq("pq_codebook", "pq_meta", "pq_codes")
-
-  /** Whether the sidecar commits through the unified store manifest:
-    * the flavor marker is a versioned dataDir there. */
-  private def pqVersioned(spark: SparkSession, path: String): Boolean =
-    StoreSwap.isUnified(spark, path) &&
-      StoreSwap.latestSnapshot(spark, path, "pq_meta").isDefined
 
   /** The pinned store version EVERY artifact of one flavored read
     * resolves at — the reader-atomicity point: three separate
     * latest-manifest resolutions could straddle a commit, a single
     * pinned version cannot. None = legacy live-dir sidecar. */
   private def pqPin(spark: SparkSession, path: String): Option[Int] =
-    if (pqVersioned(spark, path))
-      Some(StoreSwap.snapshotVersions(spark, path, "pq_meta").last)
-    else None
+    StoreSwap.snapshotVersions(spark, path).lastOption
 
   /** A sidecar artifact at the pinned version (or the legacy live
     * dir). */
@@ -1390,33 +1330,16 @@ object Similarity {
       .withColumn("c_bucket",
         pmod(col("cluster"), lit(buckets.toLong)).cast("int"))
     if (StoreSwap.isUnified(spark, path)) {
-      // Retire LEGACY artifact dirs of a store unified after its
-      // sidecar was built — but only once a versioned triple has
-      // ALREADY been serving reads (i.e. on the rewrite AFTER the
-      // cutover one): deleting them in the same call that publishes
-      // the first versioned triple would race a reader that resolved
-      // the legacy path just before the commit (pqVersioned was still
-      // false for it). Deferred, the dirs are dead weight for one
-      // rewrite cycle; a reader that began before the cutover commit
-      // and is STILL running at the next rewrite falls under the
-      // legacy maintenance-window contract it started under.
-      if (pqVersioned(spark, path))
-        PqSidecarDirs.foreach { d =>
-          val live = new org.apache.hadoop.fs.Path(s"$path/$d")
-          if (fs.exists(live)) fs.delete(live, true)
-        }
-      // READER-ATOMIC commit: the three artifacts become versioned
-      // dataDirs published by ONE manifest rename. A crash anywhere
-      // inside the txn leaves the previous triple fully live.
+      // READER-ATOMIC commit: the three artifacts are manifest dataDirs
+      // published by ONE manifest rename. A crash anywhere inside the
+      // txn leaves the previous triple fully live.
       StoreSwap.transact(spark, path) {
         StoreSwap.overwriteDir(spark, path, "pq_codebook", "part",
-          cents.withColumn("part", lit(0)), Seq(col("sub"), col("cid")),
-          forceVersioned = true)
+          cents.withColumn("part", lit(0)), Seq(col("sub"), col("cid")))
         StoreSwap.overwriteDir(spark, path, "pq_meta", "part",
-          meta.withColumn("part", lit(0)), Seq(col("residual")),
-          forceVersioned = true)
+          meta.withColumn("part", lit(0)), Seq(col("residual")))
         StoreSwap.overwriteDir(spark, path, "pq_codes", "c_bucket",
-          codes, Seq(col("cluster"), col("id")), forceVersioned = true)
+          codes, Seq(col("cluster"), col("id")))
       }
       return
     }
@@ -1635,14 +1558,11 @@ object Similarity {
     // every flavored read/mutation funnels through here — roll a
     // committed-but-unapplied sidecar swap forward before trusting the
     // marker (the marker and the codes must never be read split-brain);
-    // a unified-store pin supersedes this: the triple resolves from one
-    // immutable manifest and there is no swap to roll forward
+    // a versioned-store pin supersedes this: the triple resolves from
+    // one immutable manifest and there is no swap to roll forward
     val effPin = pin.orElse { pqRecover(spark, path); pqPin(spark, path) }
-    if (effPin.isEmpty) {
-      val p = new org.apache.hadoop.fs.Path(path + "/pq_meta")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) return (false, false, None)
-    }
+    if (!StoreSwap.dirExists(spark, path, "pq_meta"))
+      return (false, false, None)
     val meta = pqDirDf(spark, path, "pq_meta", "part", effPin)
     val row = meta.head
     val opq =
@@ -1693,7 +1613,7 @@ object Similarity {
     val buckets = StoreSwap.storeBuckets(spark, path)
     // a residual/rotated sidecar's deltas must be encoded the same way
     // — the flavor travels with the sidecar, not the caller. Pin the
-    // codebook and flavor to ONE version (versioned sidecars).
+    // codebook and flavor to ONE version (versioned stores).
     val pin = pqPin(spark, path)
     val pqcb = pqDirDf(spark, path, "pq_codebook", "part", pin)
     val (residual, rotated, opq) = pqFlavor(spark, path, pin)
@@ -1703,14 +1623,8 @@ object Similarity {
     val coded = packedCodes(enc, pqcb, idCol, encCol, m, dsub)
       .withColumn("c_bucket",
         pmod(col("cluster"), lit(buckets.toLong)).cast("int"))
-    if (pin.isDefined)
-      StoreSwap.appendDir(spark, path, "pq_codes", "c_bucket", coded,
-        Seq(col("cluster"), col("id")))
-    else coded
-      .repartition(col("c_bucket"))
-      .sortWithinPartitions(col("cluster"), col("id"))
-      .write.mode("append").partitionBy("c_bucket")
-      .parquet(path + "/pq_codes")
+    StoreSwap.appendDir(spark, path, "pq_codes", "c_bucket", coded,
+      Seq(col("cluster"), col("id")))
   }
 
   /** IVF-PQ top-k over the partitioned store — coarse probing decides
@@ -1975,14 +1889,14 @@ object Similarity {
 
   /** Buckets of `$path/$dataDir` holding more than `maxFiles` data
     * files — the shared fragmentation detector of both compactors. A
-    * versioned dataDir counts each bucket's files ACROSS its
+    * versioned store counts each bucket's files ACROSS its
     * generations (appends add a gen per batch — the fragmentation is
     * the gen list); legacy dirs are listed directly. */
   private def fragBuckets(spark: SparkSession, path: String,
                           dataDir: String, partCol: String,
                           maxFiles: Int): Seq[Int] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    if (StoreSwap.dataDirVersioned(spark, path, dataDir))
+    if (StoreSwap.isUnified(spark, path))
       StoreSwap.latestSnapshot(spark, path, dataDir).toSeq.flatMap {
         case (_, entries) => entries.toSeq.flatMap { case (d, gens) =>
           d.stripPrefix(partCol + "=").toIntOption.filter { _ =>
@@ -2156,12 +2070,12 @@ object Similarity {
                                 iters: Int = 2): Seq[(Long, Seq[Double])] = {
     if (drifted.isEmpty) return Seq.empty
     // one lease across the whole delete→append→re-encode→codebook
-    // sequence (constituent mutations re-enter it). On a UNIFIED store
+    // sequence (constituent mutations re-enter it). On a versioned store
     // the sequence additionally publishes as ONE manifest rename
     // ([[StoreSwap.transact]]): a reader racing the refit sees the
     // pre-refit store or the finished one — never the window where the
     // drifted members are deleted but their re-clustered rows not yet
-    // appended (per-dataDir stores keep the documented idempotent
+    // appended (legacy stores keep the documented idempotent
     // re-run recovery; their intermediate commits are each
     // crash-atomic but individually visible). A crash anywhere inside
     // the txn rolls the store to its pre-refit version — the

@@ -10,62 +10,66 @@ import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import scala.jdk.CollectionConverters._
 
-/** Crash-atomic bucket rewrite for the partitioned standing stores
+/** Crash-atomic commits for the partitioned standing stores
   * ([[Similarity.writeStandingStore]]'s embedding store and
-  * [[Dedup.writeSignatureStore]]'s minhash store).
+  * [[Dedup.writeSignatureStore]]'s minhash store). A store commits
+  * through one of TWO protocols, chosen by the writer's `versioned`
+  * flag when the store is first written and kept for its lifetime —
+  * there is no migration between them:
   *
-  * The mutation paths (delete-by-id, delete-by-cluster, forget-docs,
-  * bucket-local merge, compaction) all rewrite a bounded set of
-  * `partCol=b` directories under `$path/data`. Doing that as a dynamic
-  * partition overwrite of the path being read has two hazards this
-  * helper removes:
-  *
-  *   1. '''Crash window.''' An overwrite-then-delete sequence that dies
-  *      midway resurrects "forgotten" rows or leaves the store half
-  *      rewritten — unacceptable for a right-to-be-forgotten API. Here
-  *      the rewritten buckets are STAGED under `$path/.staging` (Spark
-  *      never lists dot-dirs, so readers can't see them), then a
-  *      manifest at `$path/_pending_swap` is renamed into place — the
-  *      single commit point — and only then are bucket directories
-  *      swapped one rename each. A crash before the manifest leaves the
-  *      store byte-identical (the orphan staging dir is inert and
-  *      reclaimed on the next mutation); a crash after it is rolled
-  *      FORWARD by [[recover]], which every store read/mutation entry
-  *      point calls first. Bucket swaps are idempotent, so recovery can
-  *      itself crash and re-run.
-  *   2. '''Executor-memory pinning.''' The old shape eagerly
-  *      `localCheckpoint(true)`-ed the kept slice (Spark refuses a
-  *      write that still reads the path it replaces, and the source
-  *      files were about to be destroyed). With buckets sized to a few
-  *      GB and many touched per batch, that pins the whole slice in
-  *      executor memory at the 100 TB design point. The staging write
-  *      IS the materialization now — straight to disk, source files
-  *      untouched until the swap, nothing pinned.
+  *  - '''Plain staged swap''' (`versioned = false`). The mutation paths
+  *    (delete-by-id, delete-by-cluster, forget-docs, bucket-local merge,
+  *    compaction) rewrite a bounded set of `partCol=b` directories under
+  *    `$path/<dataDir>` in place. Doing that as a dynamic partition
+  *    overwrite of the path being read has two hazards this protocol
+  *    removes:
+  *      1. '''Crash window.''' An overwrite-then-delete sequence that
+  *         dies midway resurrects "forgotten" rows or leaves the store
+  *         half rewritten — unacceptable for a right-to-be-forgotten API.
+  *         Here the rewritten buckets are STAGED under `$path/.staging`
+  *         (Spark never lists dot-dirs, so readers can't see them), then
+  *         a manifest at `$path/_pending_swap` is renamed into place —
+  *         the single commit point — and only then are bucket
+  *         directories swapped one rename each. A crash before the
+  *         manifest leaves the store byte-identical (the orphan staging
+  *         dir is inert and reclaimed on the next mutation); a crash
+  *         after it is rolled FORWARD by [[recover]], which every store
+  *         read/mutation entry point calls first. Bucket swaps are
+  *         idempotent, so recovery can itself crash and re-run. The
+  *         manifest records which touched buckets survived (staged) vs
+  *         emptied (their live directories must be dropped or deleted
+  *         rows resurface), so recovery never confuses "already swapped"
+  *         with "emptied".
+  *      2. '''Executor-memory pinning.''' Spark refuses a write that
+  *         still reads the path it replaces; the staging write IS the
+  *         materialization — straight to disk, source files untouched
+  *         until the swap, nothing pinned in executor memory.
+  *    Readers list the live dirs directly (no indirection), but the
+  *    swap INSTANT is visible: [[applySwap]] deletes a live bucket
+  *    directory and then renames the staged one in, so a reader listing
+  *    the store between the two operations sees that bucket missing —
+  *    concurrent readers need a maintenance window.
+  *  - '''Unified manifest''' (`versioned = true`). Every dataDir of the
+  *    store (data, band index, sidecars, codebooks) lives in immutable
+  *    generation dirs, and ONE store-wide manifest family under `_v`
+  *    says which are live. Commits are one manifest rename, so a reader
+  *    always resolves a complete snapshot — old or new, never mid-swap —
+  *    and any retained version is a consistent state of the WHOLE store
+  *    (time travel, manifest-pruned diffs, historical judgment replay).
+  *    Composed multi-dataDir mutations publish as one version through
+  *    [[transact]]; streaming sinks get an exactly-once batch ledger in
+  *    the same rename as their data.
   *
   * Directory renames are atomic on HDFS-semantics filesystems (HDFS,
   * local, ABFS); on raw S3 they are copy+delete, where a production
   * deployment should put the store behind a table format with a real
-  * commit protocol instead. The manifest records which touched buckets
-  * survived (staged) vs emptied (no rows left — their live directories
-  * must be dropped or deleted rows resurface), so recovery never
-  * confuses "already swapped" with "emptied".
+  * commit protocol instead.
   *
-  * '''Concurrency contract.''' Staging is invisible to readers, but the
-  * legacy swap INSTANT is not: [[applySwap]] deletes a live bucket
-  * directory and then renames the staged one in, so a reader listing
-  * the store between the two operations sees that bucket missing.
-  * Crash safety (single writer, roll-forward) is complete; for
-  * concurrent-READER isolation, opt the store into the VERSIONED
-  * manifest mode below ([[enableVersioning]] /
-  * `writeSignatureStore(versioned = true)`): commits become one
-  * manifest rename over immutable generation dirs, so a reader always
-  * resolves a complete snapshot — old or new, never mid-swap — and can
-  * serve straight through maintenance. Legacy stores keep the
-  * maintenance-window requirement. Mutators are SINGLE-WRITER by
-  * contract in both modes, enforced: every mutation entry point runs
-  * under [[withLease]], and a second simultaneous mutator of the same
-  * store path fails fast instead of corrupting the shared staging dir
-  * and manifest.
+  * '''Writers.''' Mutators are SINGLE-WRITER by contract under both
+  * protocols, enforced: every mutation entry point runs under
+  * [[withLease]], and a second simultaneous mutator of the same store
+  * path fails fast instead of corrupting the shared staging dir and
+  * manifest.
   */
 object StoreSwap {
   private def fsOf(spark: SparkSession, p: Path): FileSystem =
@@ -290,14 +294,16 @@ object StoreSwap {
   def storeBuckets(spark: SparkSession, path: String): Int =
     readConstants(spark, path + "/meta")("buckets")
 
+
   /** Crash-atomic rewrite of the `touched` buckets of `$path/$dataDir`
     * (default `data`; the PQ code sidecar passes `pq_codes`). `slice`
     * must be the full replacement content for those buckets and carry
     * `partCol`; buckets of `touched` absent from `slice` are emptied
-    * (their directories dropped at swap). Returns the staged row count
-    * (= rows the touched buckets hold after the swap), summed from the
-    * staged files' parquet footers on the driver, so callers can derive
-    * deleted-row counts without evaluating `slice` twice. */
+    * (their directories dropped at swap, their entries dropped from the
+    * manifest). Returns the staged row count (= rows the touched
+    * buckets hold after the swap), summed from the staged files'
+    * parquet footers on the driver, so callers can derive deleted-row
+    * counts without evaluating `slice` twice. */
   def stagedRewrite(spark: SparkSession, path: String, partCol: String,
                     touched: Seq[Int], slice: DataFrame,
                     sortCols: Seq[Column],
@@ -305,25 +311,18 @@ object StoreSwap {
     recover(spark, path) // finish any interrupted predecessor first
     val stg = staging(path)
     val fs = fsOf(spark, stg)
-    if (fs.exists(stg)) fs.delete(stg, true) // orphan of a pre-commit crash
-    slice
-      .repartition(col(partCol))
-      .sortWithinPartitions(sortCols: _*)
-      .write.partitionBy(partCol).parquet(stg.toString)
-    val stagedBuckets = fs.listStatus(stg)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(partCol + "="))
-      .map(_.getPath.getName.stripPrefix(partCol + "=").toInt).toSet
+    val stagedBuckets = stage(fs, stg, partCol, slice, sortCols)
     // a rewrite that empties EVERY touched bucket stages no data files
     // at all, so the footer sum is 0 with nothing to open
     val kept = parquetFiles(fs, stg)
       .map(footer(spark, _)(_.getRecordCount)).sum
-    if (dataDirVersioned(spark, path, dataDir)) {
-      // reader-atomic commit path: staged buckets become an immutable
-      // generation, visibility flips with one manifest rename, emptied
-      // touched buckets simply leave the manifest. No _pending_swap, no
-      // roll-forward — a crash before the manifest leaves the store
-      // byte-identical (the orphan gen is reclaimed at the next commit).
-      commitVersioned(spark, path, dataDir, stg,
+    if (isUnified(spark, path)) {
+      // staged buckets become an immutable generation, visibility flips
+      // with one manifest rename, emptied touched buckets simply leave
+      // the manifest. No _pending_swap, no roll-forward — a crash before
+      // the manifest leaves the store byte-identical (the orphan gen is
+      // reclaimed at the next commit).
+      commitUnified(spark, path, dataDir, stg,
         stagedBuckets.map(b => s"$partCol=$b"),
         touchedDirs = touched.map(b => s"$partCol=$b").toSet,
         replaceAll = false)
@@ -351,71 +350,56 @@ object StoreSwap {
     kept
   }
 
-  // ---- versioned-manifest snapshot mode ------------------------------
+  /** Write `df` partitioned by `partCol` into a fresh staging dir `stg`
+    * (any orphan of a pre-commit crash is dropped first) and return the
+    * bucket ids it staged. */
+  private def stage(fs: FileSystem, stg: Path, partCol: String,
+                    df: DataFrame, sortCols: Seq[Column]): Set[Int] = {
+    if (fs.exists(stg)) fs.delete(stg, true)
+    df.repartition(col(partCol))
+      .sortWithinPartitions(sortCols: _*)
+      .write.partitionBy(partCol).parquet(stg.toString)
+    fs.listStatus(stg)
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith(partCol + "="))
+      .map(_.getPath.getName.stripPrefix(partCol + "=").toInt).toSet
+  }
+
+  // ---- the unified manifest ------------------------------------------
   //
-  // The legacy swap above is crash-atomic but not READER-atomic: the
-  // per-bucket delete+rename leaves an instant where a listing reader
-  // sees the bucket missing (the documented maintenance-window caveat).
-  // The versioned mode removes that caveat with indirection:
-  //
-  //   $path/_v/<dataDir>.v<N>            — committed manifests: one line
-  //                                        per live bucket dir,
-  //                                        "partCol=b|g1,g2,…" (the gens
-  //                                        holding that bucket's files —
-  //                                        a set, so appends stay O(delta))
+  //   $path/_v/store.v<N>                — committed manifests, one line
+  //                                        per entry: "<dataDir>/partCol=b
+  //                                        |g1,g2,…" (the gens holding
+  //                                        that bucket's files — a set, so
+  //                                        appends stay O(delta)), plus
+  //                                        reserved `#…` metadata entries
   //   $path/<dataDir>.gens/g<G>/partCol=b/part-*.parquet
   //                                      — IMMUTABLE once committed;
   //                                        each commit renames its staged
   //                                        buckets in as a fresh gen
   //
-  // A read resolves the LATEST manifest (one file read = an atomic
-  // snapshot), lists exactly the referenced dirs, and reads them with
-  // per-gen basePath so the partition column still infers. A mutation
-  // stages as before, renames the staging dir to gens/g<v+1> (orphan if
-  // it crashes here — inert, reclaimed on the next commit), and commits
-  // by renaming manifest v+1 into _v — the single visibility point.
-  // There is NO roll-forward: either the manifest exists (commit
-  // complete, nothing left to do) or it doesn't (store unchanged). A
-  // reader that resolved just before a commit keeps reading its gens
+  // A read resolves ONE manifest (one file read = an atomic snapshot of
+  // the whole store), lists exactly the referenced dirs, and reads them
+  // with per-gen basePath so the partition column still infers. A
+  // mutation stages as the plain swap does, renames the staging dir to
+  // a fresh gen (an orphan if it crashes here — inert, reclaimed on the
+  // next commit), and commits by renaming manifest v+1 into _v — the
+  // single visibility point. There is NO roll-forward: either the
+  // manifest exists (commit complete) or it doesn't (store unchanged).
+  // A reader that resolved just before a commit keeps reading its gens
   // untouched: GC unlinks only gens unreferenced by the last
   // `graft.store.snapshotKeep`+1 manifests (default 1 prior — the grace
-  // window; raise it for long-running readers).
+  // window; raise it for long-running readers and time travel).
+  // Generation numbers are per dataDir (allocated max+1 over every
+  // retained reference and whatever is on disk, so orphans of crashed
+  // commits can never collide); batch ledgers are per dataDir
+  // (`#batches:<dataDir>`) so independent batch streams never alias.
 
   private def versionsDir(path: String) = new Path(path + "/_v")
 
-  /** Whether `path` commits through versioned manifests. */
-  def isVersioned(spark: SparkSession, path: String): Boolean = {
-    val v = versionsDir(path)
-    fsOf(spark, v).exists(v)
-  }
-
-  // ---- unified store manifests ---------------------------------------
-  //
-  // The per-dataDir manifests above give each dataDir its OWN version
-  // line, so a composed store (the text store's data + bands +
-  // bands_inv + shingles) has no consistent cross-dataDir snapshot: a
-  // time-travel read pins signatures only, and a reader can observe new
-  // signatures with a not-yet-merged band index mid-ingest. The UNIFIED
-  // mode replaces the four families with ONE manifest
-  // (`_v/store.v<N>`) whose entries are "<dataDir>/<partDir>|gens" —
-  // the same immutable per-dataDir generation dirs underneath, but
-  // every commit (and, through [[transact]], every composed MULTI-
-  // dataDir mutation) publishes with one rename. Any retained store
-  // version is then a consistent snapshot of the WHOLE store: a
-  // historical judgment replay reads the bands, sidecar, and data the
-  // live judgment saw at that version. Generation numbers stay
-  // per-dataDir (allocated max+1 over every retained reference and
-  // whatever is on disk, so orphans of crashed commits can never
-  // collide); ledger keys are namespaced per dataDir
-  // (`#batches:<dataDir>`) so independent batch streams never alias.
-
-  /** The manifest family name of the unified mode — reserved; no
-    * dataDir may be called this. */
-  private val StoreFamily = "store"
-
-  /** Whether `path` commits through ONE unified store manifest. */
+  /** Whether `path` commits through the unified store manifest (a store
+    * written with `versioned = true`). */
   def isUnified(spark: SparkSession, path: String): Boolean =
-    manifests(fsOf(spark, versionsDir(path)), path, StoreFamily).nonEmpty
+    manifests(fsOf(spark, versionsDir(path)), path).nonEmpty
 
   /** An open composite commit: entry updates accumulate here and
     * publish as ONE manifest rename when [[transact]] closes. */
@@ -432,13 +416,13 @@ object StoreSwap {
   private def latestUnifiedRaw(spark: SparkSession,
                                path: String): Option[(Int, Map[String, Seq[Long]])] = {
     val fs = fsOf(spark, versionsDir(path))
-    manifests(fs, path, StoreFamily).lastOption
+    manifests(fs, path).lastOption
       .map { case (v, p) => (v, readManifest(fs, p)) }
   }
 
-  /** The unified entries THIS thread currently sees: an open txn's
-    * pending view (read-your-own-writes — a composed mutation's later
-    * steps read its earlier steps' commits) or the latest manifest. */
+  /** The entries THIS thread currently sees: an open txn's pending view
+    * (read-your-own-writes — a composed mutation's later steps read its
+    * earlier steps' commits) or the latest manifest. */
   private def unifiedView(spark: SparkSession,
                           path: String): Option[(Int, Map[String, Seq[Long]])] =
     activeTxn.get.get(path) match {
@@ -446,134 +430,39 @@ object StoreSwap {
       case None => latestUnifiedRaw(spark, path)
     }
 
-  /** A dataDir's slice of a unified entry map: bare partDir keys, plus
-    * the dataDir's OWN namespaced ledger renamed to the per-dataDir
-    * `#batches` key (other dataDirs' ledgers are not its business). */
+  /** The current view, or version -1 with no entries for a store whose
+    * first commit is the caller's. */
+  private def currentView(spark: SparkSession,
+                          path: String): (Int, Map[String, Seq[Long]]) =
+    unifiedView(spark, path).getOrElse((-1, Map.empty))
+
+  /** A dataDir's bucket entries out of the store-wide entry map, keyed by
+    * bare partDir (reserved metadata entries dropped). */
   private def sliceDataDir(all: Map[String, Seq[Long]],
                            dataDir: String): Map[String, Seq[Long]] = {
     val pfx = dataDir + "/"
-    val bk = unifiedBatchesKey(dataDir)
-    val sliced: Map[String, Seq[Long]] = all.collect {
-      // only THIS dataDir's namespaced ledger, under its per-dataDir
-      // name — the slice looks exactly like a per-dataDir manifest
-      case (k, v) if k == bk => BatchesKey -> v
-      case (k, v) if k.startsWith(pfx) => k.stripPrefix(pfx) -> v
-    }
-    // Stores unified BEFORE the ledger was namespaced wrote ONE
-    // store-wide `#batches` key. Until a dataDir's first post-upgrade
-    // ack migrates it (commitUnified folds it into the namespaced
-    // key), that legacy ledger is every dataDir's ledger — dropping it
-    // here would erase the exactly-once window across the upgrade and
-    // re-apply a redelivered batch.
-    if (sliced.contains(BatchesKey)) sliced
-    else all.get(BatchesKey).fold(sliced)(v => sliced + (BatchesKey -> v))
-  }
-
-  /** MIGRATE a versioned store to the unified manifest: each dataDir's
-    * LATEST per-dataDir state (or its legacy live dir, renamed in as
-    * generation 0) becomes its slice of the first `store.v<N>`
-    * manifest, and the old per-dataDir manifest families are retired.
-    * That manifest rename is the commit point — a crash before it
-    * leaves the store on its old protocol (a dataDir whose live→g0
-    * rename already completed is ADOPTED by the re-run, not skipped);
-    * a crash after it leaves stale per-dataDir manifest files that a
-    * re-run deletes (reads already prefer the unified manifest).
-    * Per-dataDir HISTORY is not carried over — retention restarts at
-    * the cutover — and the unified numbering starts ABOVE every
-    * pre-migration version, so a read of a pre-migration version
-    * number fails fast with the cutover runbook message instead of
-    * aliasing a later unified snapshot. Idempotent.
-    * `seedMeta` pins model/layout constants (name → longs, see
-    * [[putStoreMeta]]) INTO the migration manifest itself, so the
-    * cutover snapshot is historically replayable without a second
-    * version bump. */
-  def unifyVersioning(spark: SparkSession, path: String,
-                      dataDirs: Seq[String],
-                      seedMeta: Map[String, Seq[Long]] = Map.empty)
-                     : Unit = withLease(spark, path) {
-    require(!dataDirs.contains(StoreFamily),
-      s"'$StoreFamily' is the unified manifest family name, not a dataDir")
-    recover(spark, path)
-    val fs = fsOf(spark, versionsDir(path))
-    if (!isUnified(spark, path)) {
-      var all = Map.empty[String, Seq[Long]]
-      // The unified numbering starts ABOVE every per-dataDir version:
-      // per-dataDir history is not carried across the cutover
-      // (retention restarts), and starting at v0 would let a
-      // pre-migration version NUMBER silently alias a later unified
-      // snapshot — a reader asking for the old "v2" must fail fast
-      // ([[readVersionedAt]]'s cutover message), never get a different
-      // store state that happens to share the number.
-      var startV = 0
-      dataDirs.foreach { d =>
-        val perDir = manifests(fs, path, d)
-        if (perDir.nonEmpty) {
-          startV = math.max(startV, perDir.last._1 + 1)
-          val e = readManifest(fs, perDir.last._2)
-          all ++= e.collect {
-            case (k, gs) if !isReservedKey(k) => s"$d/$k" -> gs
-          }
-          // each dataDir tracked its OWN batch stream pre-migration;
-          // keep them namespaced so overlapping batch ids from
-          // independent streams can't alias into one store-wide ledger
-          e.get(BatchesKey).foreach { ids =>
-            all += unifiedBatchesKey(d) -> ids
-          }
-        } else {
-          val live = new Path(s"$path/$d")
-          val g0 = new Path(s"$path/$d.gens/g0")
-          if (fs.exists(live)) {
-            fs.mkdirs(g0.getParent)
-            if (fs.exists(g0)) fs.delete(g0, true) // crashed predecessor
-            if (!fs.rename(live, g0))
-              sys.error(s"could not migrate $live to $g0")
-          }
-          // Adopt g0 whether THIS run renamed it or a crashed
-          // predecessor did (rename done, store.v0 not yet written):
-          // skipping a live-less g0 would commit a manifest WITHOUT the
-          // dataDir and orphan its data, breaking the idempotence
-          // contract. The rename is the per-dataDir migration point;
-          // the manifest write below is the store-wide commit point.
-          if (fs.exists(g0))
-            all ++= fs.listStatus(g0)
-              .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-              .map(s => s"$d/${s.getPath.getName}" -> Seq(0L))
-        }
-      }
-      all ++= seedMeta.map { case (n, vs) => storeMetaKey(n) -> vs }
-      writeManifest(fs, path, StoreFamily, startV, all) // the commit point
-    }
-    // retire the per-dataDir families (also the crash-after-commit
-    // cleanup path): the unified manifest took precedence the instant
-    // it committed, and nextGen never consults these
-    dataDirs.foreach { d =>
-      manifests(fs, path, d).foreach { case (_, p) => fs.delete(p, false) }
-    }
-    fs.mkdirs(versionsDir(path))
+    all.collect { case (k, v) if k.startsWith(pfx) => k.stripPrefix(pfx) -> v }
   }
 
   /** Run `body` as ONE composite commit of a unified store: every
-    * versioned mutation inside it (staged rewrites, appends, ledger
-    * acks — across ANY of the store's dataDirs) accumulates into one
+    * mutation inside it (staged rewrites, appends, ledger acks, store
+    * metadata — across ANY of the store's dataDirs) accumulates into one
     * pending entry map that publishes as a single `store.v<N+1>`
-    * manifest rename when `body` returns. A crash or exception
-    * anywhere inside leaves the store AT ITS PRE-TXN VERSION — the
-    * staged generation dirs are unreferenced orphans reclaimed by the
-    * next commit's GC. Mutations inside the txn read their own
-    * pending writes (a composed ingest's band merge reads the
-    * signatures its first step merged); other threads keep resolving
-    * the committed manifest. Reentrant; requires the unified
-    * protocol. */
+    * manifest rename when `body` returns. A crash or exception anywhere
+    * inside leaves the store AT ITS PRE-TXN VERSION — the staged
+    * generation dirs are unreferenced orphans reclaimed by the next
+    * commit's GC. Mutations inside the txn read their own pending
+    * writes (a composed ingest's band merge reads the signatures its
+    * first step merged); other threads keep resolving the committed
+    * manifest. Reentrant. */
   def transact[T](spark: SparkSession, path: String)(body: => T): T =
     withLease(spark, path) {
       if (activeTxn.get.contains(path)) body
       else {
         recover(spark, path)
-        require(isUnified(spark, path),
-          s"$path is not a unified-manifest store — migrate with" +
-            " unifyVersioning before using composite transactions")
-        val (baseV, entries) = latestUnifiedRaw(spark, path)
-          .getOrElse((-1, Map.empty[String, Seq[Long]]))
+        val (baseV, entries) = latestUnifiedRaw(spark, path).getOrElse(
+          sys.error(s"$path is not a unified-manifest store — composite" +
+            " transactions need a store written with versioned = true"))
         val t = new Txn(baseV)
         t.entries = entries
         activeTxn.get(path) = t
@@ -598,11 +487,7 @@ object StoreSwap {
               throw e
           }
         activeTxn.get.remove(path)
-        if (t.dirty) {
-          val fs = fsOf(spark, versionsDir(path))
-          writeManifest(fs, path, StoreFamily, baseV + 1, t.entries)
-          gcUnified(spark, fs, path)
-        }
+        if (t.dirty) publish(spark, path, baseV, t.entries)
         result
       }
     }
@@ -610,11 +495,11 @@ object StoreSwap {
   /** Run `body` as ONE composite commit when the store is unified —
     * the wrapper every multi-swap mutation (forget across data +
     * sidecar, band merge across index + inventory, refit across
-    * delete/append/codebook/codes) puts around its sequence so unified
+    * delete/append/codebook/codes) puts around its sequence, so unified
     * stores get reader-atomic, single-version semantics for the WHOLE
-    * operation, while per-dataDir stores keep their documented
-    * crash-atomic-per-swap + idempotent-re-run contract. Reentrant
-    * (an enclosing [[transact]] absorbs it). */
+    * operation while plain-swap stores keep their crash-atomic-per-swap
+    * + idempotent-re-run contract. Reentrant (an enclosing [[transact]]
+    * absorbs it). */
   def atomicallyIfUnified[T](spark: SparkSession, path: String)
                             (body: => T): T =
     if (isUnified(spark, path)) transact(spark, path)(body) else body
@@ -622,21 +507,37 @@ object StoreSwap {
   /** [[withLease]] + [[atomicallyIfUnified]] — the standard bracket of
     * a multi-swap store mutation. Bodies with early `return`: safe
     * only while every such return precedes the first manifest mutation
-    * — [[transact]] now DETECTS a non-local return unwinding a dirty
-    * txn and fails loudly instead of silently dropping the work. */
+    * — [[transact]] DETECTS a non-local return unwinding a dirty txn
+    * and fails loudly instead of silently dropping the work. */
   def withLeaseAtomic[T](spark: SparkSession, path: String)
                         (body: => T): T =
     withLease(spark, path) { atomicallyIfUnified(spark, path)(body) }
 
+  /** Publish `entries` as version `baseV + 1` — or, inside an open
+    * [[transact]], fold them into the txn's pending view. The snapshot
+    * window is read before the commit point, so a bad
+    * `graft.store.snapshotKeep` fails with the store unchanged. */
+  private def publish(spark: SparkSession, path: String, baseV: Int,
+                      entries: Map[String, Seq[Long]]): Unit =
+    activeTxn.get.get(path) match {
+      case Some(t) =>
+        t.entries = entries
+        t.dirty = true
+      case None =>
+        val keep = snapshotKeep(spark)
+        val fs = fsOf(spark, versionsDir(path))
+        writeManifest(fs, path, baseV + 1, entries)
+        gcUnified(fs, path, keep)
+    }
+
   /** Next free generation number for `dataDir` — strictly above every
-    * gen any RETAINED unified manifest references, the current (txn)
-    * view references, or that exists on disk (orphans of crashed
-    * commits must not be reused while a reader could still list
-    * them). */
+    * gen any RETAINED manifest references, the current (txn) view
+    * references, or that exists on disk (orphans of crashed commits
+    * must not be reused while a reader could still list them). */
   private def nextGen(fs: FileSystem, path: String, dataDir: String,
                       current: Map[String, Seq[Long]]): Long = {
     val pfx = dataDir + "/"
-    val fromManifests = manifests(fs, path, StoreFamily)
+    val fromManifests = manifests(fs, path)
       .flatMap { case (_, p) =>
         readManifest(fs, p).collect {
           case (k, gs) if k.startsWith(pfx) => gs
@@ -653,23 +554,22 @@ object StoreSwap {
     (fromManifests ++ fromCurrent ++ fromDisk).foldLeft(-1L)(math.max) + 1
   }
 
-  /** The unified commit: rename staged buckets in as a fresh
-    * generation of `dataDir`, fold the dataDir's entry updates into
-    * the store-wide map, publish (or defer to the open txn). Same
-    * append/replace/touched semantics as the per-dataDir commit,
-    * scoped to the dataDir's slice. */
+  /** The unified commit: rename staged buckets in as a fresh generation
+    * of `dataDir`, fold the dataDir's entry updates into the store-wide
+    * map, publish. `append` ADDS the gen to its buckets' gen lists;
+    * otherwise the staged buckets REPLACE their entries, together with
+    * every `touchedDirs` entry (rewrite) or every entry of the dataDir
+    * (`replaceAll`). The batch ledger rides the same manifest rename as
+    * the data it acknowledges — exactly-once hinges on that atomicity. */
   private def commitUnified(spark: SparkSession, path: String,
                             dataDir: String, stg: Path,
                             stagedBuckets: Set[String],
                             touchedDirs: Set[String],
                             replaceAll: Boolean,
-                            append: Boolean,
-                            batchRecord: Option[Long]): Unit = {
+                            append: Boolean = false,
+                            batchRecord: Option[Long] = None): Unit = {
     val fs = fsOf(spark, stg)
-    val txnOpt = activeTxn.get.get(path)
-    val (baseV, all0) = txnOpt.map(t => (t.baseV, t.entries))
-      .orElse(latestUnifiedRaw(spark, path))
-      .getOrElse((-1, Map.empty[String, Seq[Long]]))
+    val (baseV, all0) = currentView(spark, path)
     val pfx = dataDir + "/"
     val gen =
       if (stagedBuckets.isEmpty) -1L // ledger-only commit stages nothing
@@ -683,6 +583,10 @@ object StoreSwap {
         g
       }
     val stagedP = stagedBuckets.map(pfx + _)
+    // replaceAll drops every BUCKET entry of the dataDir but carries the
+    // reserved entries (#batches, #meta) through: a mid-stream full
+    // rewrite (refit, sidecar rebuild) must not amnesia the exactly-once
+    // ledger, or a batch redelivered after the rewrite re-applies
     val entries =
       if (append)
         all0 ++ stagedP.map(d => d -> (all0.getOrElse(d, Seq.empty) :+ gen))
@@ -692,43 +596,28 @@ object StoreSwap {
           stagedP.map(_ -> Seq(gen))
     val withLedger = batchRecord match {
       case Some(id) =>
-        val bk = unifiedBatchesKey(dataDir)
-        // seed from the legacy store-wide key when the namespaced one
-        // doesn't exist yet (store unified before the ledger was
-        // namespaced): the first post-upgrade ack migrates the window
-        // into the namespaced key. The legacy key stays — it may still
-        // be another dataDir's only ledger until ITS first ack.
-        val prior = all0.getOrElse(bk,
-          all0.getOrElse(BatchesKey, Seq.empty))
+        val bk = batchesKey(dataDir)
         entries + (bk ->
-          ((prior :+ id).distinct.takeRight(BatchLedgerKeep)))
+          ((all0.getOrElse(bk, Seq.empty) :+ id).distinct
+            .takeRight(BatchLedgerKeep)))
       case None => entries
     }
-    txnOpt match {
-      case Some(t) =>
-        t.entries = withLedger
-        t.dirty = true
-      case None =>
-        writeManifest(fs, path, StoreFamily, baseV + 1, withLedger)
-        gcUnified(spark, fs, path)
-    }
+    publish(spark, path, baseV, withLedger)
   }
 
-  /** Unified-mode GC: drop store manifests beyond the grace window,
-    * then, PER dataDir the kept manifests reference, delete
-    * unreferenced generation dirs. Gens roots of dataDirs NO kept
-    * manifest mentions are left alone — they belong to other
-    * protocols (the PQ sidecar's own family) or to an open txn. */
-  private def gcUnified(spark: SparkSession, fs: FileSystem,
-                        path: String): Unit = {
-    val keep = snapshotKeep(spark)
-    val all = manifests(fs, path, StoreFamily)
+  /** GC: drop manifests beyond the grace window (`keep` prior ones),
+    * then, PER dataDir the kept manifests reference, delete unreferenced
+    * generation dirs. Gens roots of dataDirs NO kept manifest mentions
+    * are left alone. */
+  private def gcUnified(fs: FileSystem, path: String, keep: Int): Unit = {
+    val all = manifests(fs, path)
     all.dropRight(keep + 1).foreach { case (_, p) => fs.delete(p, false) }
-    val kept = manifests(fs, path, StoreFamily).map { case (_, p) =>
-      readManifest(fs, p) }
+    val kept = manifests(fs, path).map { case (_, p) => readManifest(fs, p) }
     // NOTE: each manifest map must be flattened to a Seq BEFORE
     // collecting (dataDir, gens) pairs — collect on a Map would key the
-    // result by dataDir and silently keep ONE bucket's gens per dir
+    // result by dataDir and silently keep ONE bucket's gens per dir.
+    // Reserved entries carry batch ids and constants, not generation
+    // numbers — including them would pin unrelated gens forever.
     val byDir = kept.flatMap(_.toSeq.collect {
         case (k, gs) if !isReservedKey(k) && k.contains("/") =>
           (k.substring(0, k.indexOf("/")), gs)
@@ -745,47 +634,32 @@ object StoreSwap {
     }
   }
 
-  /** Whether THIS dataDir of the store commits through manifests: it
-    * has one, or the store is versioned and the dataDir has no legacy
-    * live dir (fresh dataDirs of a versioned store start versioned).
-    * Per-dataDir, because a versioned store may deliberately keep a
-    * dataDir on another protocol — the PQ sidecar's three artifacts
-    * swap together under `_pending_pq`, and splitting `pq_codes` into
-    * a manifest would break exactly the split-brain guarantee that
-    * protocol exists for. */
-  def dataDirVersioned(spark: SparkSession, path: String,
-                       dataDir: String): Boolean = {
-    if (!isVersioned(spark, path)) return false
-    if (latestSnapshot(spark, path, dataDir).isDefined) return true
-    val live = new Path(s"$path/$dataDir")
-    !fsOf(spark, live).exists(live)
-  }
-
-  /** `$path/$dataDir` as a DataFrame under its commit protocol:
-    * manifest-resolved snapshot (versioned) or live-dir listing
-    * (legacy). Filters on `partCol` prune files in both modes. */
+  /** `$path/$dataDir` as a DataFrame under the store's protocol:
+    * manifest-resolved snapshot (unified) or live-dir listing (plain
+    * swap). Filters on `partCol` prune files in both. */
   def readDir(spark: SparkSession, path: String, dataDir: String,
               partCol: String): DataFrame =
-    if (dataDirVersioned(spark, path, dataDir))
-      readVersioned(spark, path, dataDir, partCol)
+    if (isUnified(spark, path)) readVersioned(spark, path, dataDir, partCol)
     else spark.read.parquet(s"$path/$dataDir")
 
-  /** Whether `dataDir` exists under either protocol. */
+  /** Whether `dataDir` exists under the store's protocol. */
   def dirExists(spark: SparkSession, path: String,
                 dataDir: String): Boolean =
-    if (dataDirVersioned(spark, path, dataDir))
+    if (isUnified(spark, path))
       latestSnapshot(spark, path, dataDir).isDefined
     else {
       val p = new Path(s"$path/$dataDir")
       fsOf(spark, p).exists(p)
     }
 
-  /** Full write of a store dataDir under the store's protocol
-    * (`forceVersioned` starts a versioned dataDir). */
+  /** Full write of a store dataDir under the store's protocol.
+    * `forceVersioned` writes through the unified manifest even when the
+    * store has none yet — the first commit of a `versioned = true`
+    * store. */
   def overwriteDir(spark: SparkSession, path: String, dataDir: String,
                    partCol: String, df: DataFrame, sortCols: Seq[Column],
                    forceVersioned: Boolean = false): Unit =
-    if (forceVersioned || dataDirVersioned(spark, path, dataDir))
+    if (forceVersioned || isUnified(spark, path))
       versionedOverwrite(spark, path, partCol, df, sortCols, dataDir)
     else df
       .repartition(col(partCol))
@@ -793,47 +667,42 @@ object StoreSwap {
       .write.mode("overwrite").partitionBy(partCol)
       .parquet(s"$path/$dataDir")
 
-  /** APPEND a delta to a store dataDir under its protocol. Versioned:
-    * the staged delta becomes a new generation ADDED to its buckets'
+  /** APPEND a delta to a store dataDir under its protocol. Unified: the
+    * staged delta becomes a new generation ADDED to its buckets'
     * generation lists (reads union a bucket's gens), one manifest
-    * rename — reader-atomic like every versioned commit, and
-    * delta-footprint (untouched buckets' files never open). Legacy:
-    * a plain append write (new files land in live bucket dirs). */
-  /** @param batchId idempotent-replay key for streaming ingest
-    *                 (versioned dataDirs only): the id is recorded in
-    *                 the SAME manifest rename that publishes the data,
-    *                 so "rows visible" and "batch acknowledged" cannot
-    *                 diverge across a crash — and a redelivered batch
-    *                 (Structured Streaming's at-least-once foreachBatch
-    *                 contract after an unacknowledged epoch) is
-    *                 detected by [[committedBatches]] and skipped
-    *                 WITHOUT evaluating the DataFrame. That makes the
-    *                 sink exactly-once end-to-end. Legacy (unversioned)
-    *                 appends have no atomic data+ledger commit to offer
-    *                 and refuse the parameter. */
+    * rename — reader-atomic like every unified commit, and
+    * delta-footprint (untouched buckets' files never open). Plain swap:
+    * a plain append write (new files land in live bucket dirs).
+    *
+    * @param batchId idempotent-replay key for streaming ingest (unified
+    *                stores only): the id is recorded in the SAME
+    *                manifest rename that publishes the data, so "rows
+    *                visible" and "batch acknowledged" cannot diverge
+    *                across a crash — and a redelivered batch
+    *                (Structured Streaming's at-least-once foreachBatch
+    *                contract after an unacknowledged epoch) is detected
+    *                by [[committedBatches]] and skipped WITHOUT
+    *                evaluating the DataFrame. That makes the sink
+    *                exactly-once end-to-end. Plain-swap appends have no
+    *                atomic data+ledger commit to offer and refuse the
+    *                parameter. */
   def appendDir(spark: SparkSession, path: String, dataDir: String,
                 partCol: String, df: DataFrame,
                 sortCols: Seq[Column],
                 batchId: Option[Long] = None): Unit =
-    if (dataDirVersioned(spark, path, dataDir)) withLease(spark, path) {
+    if (isUnified(spark, path)) withLease(spark, path) {
       if (batchId.exists(committedBatches(spark, path, dataDir).contains))
         return // replayed micro-batch: already durably committed
       val stg = staging(path)
-      val fs = fsOf(spark, stg)
-      if (fs.exists(stg)) fs.delete(stg, true)
-      df.repartition(col(partCol))
-        .sortWithinPartitions(sortCols: _*)
-        .write.partitionBy(partCol).parquet(stg.toString)
-      val stagedBuckets = fs.listStatus(stg)
-        .filter(s => s.isDirectory &&
-          s.getPath.getName.startsWith(partCol + "="))
-        .map(_.getPath.getName).toSet
-      commitVersioned(spark, path, dataDir, stg, stagedBuckets,
+      val stagedBuckets =
+        stage(fsOf(spark, stg), stg, partCol, df, sortCols)
+      commitUnified(spark, path, dataDir, stg,
+        stagedBuckets.map(b => s"$partCol=$b"),
         touchedDirs = Set.empty, replaceAll = false, append = true,
         batchRecord = batchId)
     }
     else {
-      require(batchId.isEmpty, s"$path/$dataDir is not versioned:" +
+      require(batchId.isEmpty, s"$path is not versioned:" +
         " exactly-once batch tracking needs the manifest commit" +
         " protocol (writeStandingStore/writeSignatureStore with" +
         " versioned = true)")
@@ -843,59 +712,42 @@ object StoreSwap {
         .parquet(s"$path/$dataDir")
     }
 
-  /** Streaming batch ids already committed into a versioned `dataDir`
-    * — the tail window of [[BatchLedgerKeep]] most-recent ids, read
-    * from the latest manifest (one file read, atomic with the data it
-    * acknowledges). */
+  /** Streaming batch ids already committed into `dataDir`'s stream —
+    * the tail window of [[BatchLedgerKeep]] most-recent ids, read from
+    * the current manifest (one file read, atomic with the data it
+    * acknowledges). Empty on a plain-swap store. */
   def committedBatches(spark: SparkSession, path: String,
                        dataDir: String): Set[Long] =
-    (if (isUnified(spark, path))
-       // per-dataDir namespaced ledger: two dataDirs tracking
-       // independent streams with overlapping batch ids must not
-       // alias. Fall back to the legacy store-wide key for stores
-       // unified before the namespacing (same window, pre-upgrade).
-       unifiedView(spark, path).map(_._2)
-         .flatMap(m => m.get(unifiedBatchesKey(dataDir))
-           .orElse(m.get(BatchesKey)))
-     else latestSnapshot(spark, path, dataDir).map(_._2)
-       .flatMap(_.get(BatchesKey)))
+    unifiedView(spark, path)
+      .flatMap(_._2.get(batchesKey(dataDir)))
       .map(_.toSet)
       .getOrElse(Set.empty)
 
-  /** ACK-ONLY ledger commit for a versioned dataDir: record `batchId`
-    * as committed WITHOUT publishing data — the second exactly-once
-    * pattern this protocol supports. [[appendDir]]'s atomic
-    * data+ledger rename fits a single-relation sink; a COMPOSED
-    * mutation (the text lifecycle's signature + shingle + band-index
-    * merges) instead makes each step idempotent and acks LAST: a
-    * crash anywhere before the ack re-runs every step on redelivery
-    * (each converges to the same state), a crash after it skips the
-    * batch outright. One manifest rename, same ledger, same
-    * [[committedBatches]] lookup. */
+  /** ACK-ONLY ledger commit: record `batchId` as committed into
+    * `dataDir`'s stream WITHOUT publishing data. Inside a [[transact]]
+    * (the composed text ingest's three merges) the ack folds into the
+    * same manifest rename as the merges it acknowledges; on its own it
+    * publishes one version. Same ledger, same [[committedBatches]]
+    * lookup as [[appendDir]]'s batchId. */
   def ackBatch(spark: SparkSession, path: String, dataDir: String,
                batchId: Long): Unit = withLease(spark, path) {
-    require(dataDirVersioned(spark, path, dataDir),
-      s"$path/$dataDir is not versioned: the batch ledger needs the" +
-        " manifest commit protocol")
+    require(isUnified(spark, path),
+      s"$path is not versioned: the batch ledger needs the manifest" +
+        " commit protocol")
     if (committedBatches(spark, path, dataDir).contains(batchId)) return
-    commitVersioned(spark, path, dataDir, staging(path),
+    commitUnified(spark, path, dataDir, staging(path),
       stagedBuckets = Set.empty, touchedDirs = Set.empty,
       replaceAll = false, append = true, batchRecord = Some(batchId))
   }
 
-  private val BatchesKey = "#batches"
-
-  /** Unified-manifest ledger key for one dataDir's batch stream. The
-    * per-dataDir protocol keys its ledger `#batches` inside the
-    * dataDir's own manifest; the unified manifest is store-wide, so
-    * the dataDir goes INTO the key — a migrated store's streams stay
-    * as independent as they were before migration. */
-  private def unifiedBatchesKey(dataDir: String): String =
-    s"$BatchesKey:$dataDir"
+  /** Manifest ledger key for one dataDir's batch stream: two dataDirs
+    * tracking independent streams with overlapping batch ids must not
+    * alias. */
+  private def batchesKey(dataDir: String): String = s"#batches:$dataDir"
 
   /** Record model/layout constants as a reserved `#meta:<name>` entry
-    * of the unified manifest, so the constants VERSION WITH the data
-    * they describe: a historical (as-of) reader resolves them from the
+    * of the manifest, so the constants VERSION WITH the data they
+    * describe: a historical (as-of) reader resolves them from the
     * pinned manifest, never from a live sidecar a later rebuild may
     * have rewritten under different constants (e.g. the band index's
     * `idx_buckets` layout — delta bucket ids computed under a new
@@ -911,54 +763,26 @@ object StoreSwap {
     withLease(spark, path) {
     require(isUnified(spark, path),
       s"$path: versioned store metadata needs the unified manifest")
-    val keyed = meta.map { case (n, vs) => storeMetaKey(n) -> vs }
-    val txnOpt = activeTxn.get.get(path)
-    val (baseV, all0) = txnOpt.map(t => (t.baseV, t.entries))
-      .orElse(latestUnifiedRaw(spark, path))
-      .getOrElse((-1, Map.empty[String, Seq[Long]]))
-    txnOpt match {
-      case Some(t) =>
-        t.entries = all0 ++ keyed
-        t.dirty = true
-      case None =>
-        val fs = fsOf(spark, versionsDir(path))
-        writeManifest(fs, path, StoreFamily, baseV + 1, all0 ++ keyed)
-        gcUnified(spark, fs, path)
-    }
+    val (baseV, all0) = currentView(spark, path)
+    publish(spark, path, baseV,
+      all0 ++ meta.map { case (n, vs) => storeMetaKey(n) -> vs })
   }
 
   /** The `#meta:<name>` constants at a pinned manifest `version`, or
     * the current view when `version` is None. None when the manifest
     * predates the first [[putStoreMeta]] of this name (or the store is
-    * not unified) — the caller decides whether a live-sidecar fallback
-    * is safe. `whenAbsent = latest-recorded-check`: see
-    * [[storeMetaRecordedEver]]. */
+    * a plain-swap store). */
   def storeMetaAt(spark: SparkSession, path: String, name: String,
                   version: Option[Int] = None): Option[Seq[Long]] = {
-    if (!isUnified(spark, path)) return None
     val key = storeMetaKey(name)
     version match {
       case Some(v) =>
         val fs = fsOf(spark, versionsDir(path))
-        manifests(fs, path, StoreFamily)
+        manifests(fs, path)
           .collectFirst { case (mv, p) if mv == v => readManifest(fs, p) }
           .flatMap(_.get(key))
       case None => unifiedView(spark, path).flatMap(_._2.get(key))
     }
-  }
-
-  /** Whether ANY retained manifest carries `#meta:<name>` — the
-    * postdating check: a pinned version WITHOUT the record while a
-    * later retained version HAS it proves the constants were
-    * (re)recorded after the pin, so a live-sidecar fallback could
-    * apply post-pin constants to pinned data. */
-  def storeMetaRecordedEver(spark: SparkSession, path: String,
-                            name: String): Boolean = {
-    if (!isUnified(spark, path)) return false
-    val key = storeMetaKey(name)
-    val fs = fsOf(spark, versionsDir(path))
-    manifests(fs, path, StoreFamily)
-      .exists { case (_, p) => readManifest(fs, p).contains(key) }
   }
 
   private def storeMetaKey(name: String): String = s"#meta:$name"
@@ -971,28 +795,26 @@ object StoreSwap {
   val BatchLedgerKeep: Int = 64
 
   /** Manifest entry keys starting with `#` are RESERVED metadata, not
-    * bucket directories: `#batches` carries the tail of streaming batch
-    * ids already committed into the dataDir (the idempotent-replay
-    * ledger). Reads and generation GC must skip them. */
+    * bucket directories: `#batches:<dataDir>` carries the tail of
+    * streaming batch ids already committed (the idempotent-replay
+    * ledger), `#meta:<name>` versioned constants. */
   private def isReservedKey(k: String): Boolean = k.startsWith("#")
 
-  /** Parsed manifests for `dataDir`, ascending by version. */
-  private def manifests(fs: FileSystem, path: String,
-                        dataDir: String): Seq[(Int, Path)] = {
+  /** Committed store manifests, ascending by version. */
+  private def manifests(fs: FileSystem, path: String): Seq[(Int, Path)] = {
     val vd = versionsDir(path)
     if (!fs.exists(vd)) return Seq.empty
-    val prefix = dataDir + ".v"
     fs.listStatus(vd).toSeq
       .map(_.getPath)
-      .filter(_.getName.startsWith(prefix))
-      .flatMap(p => p.getName.stripPrefix(prefix).toIntOption.map(_ -> p))
+      .filter(_.getName.startsWith("store.v"))
+      .flatMap(p => p.getName.stripPrefix("store.v").toIntOption.map(_ -> p))
       .sortBy(_._1)
   }
 
   /** Manifest values are LONGS: generation numbers fit comfortably in
-    * Int, but the `#batches` ledger shares this value slot and
-    * Structured Streaming batch ids are unbounded longs — a stream
-    * past 2^31 batches must keep committing, not throw. */
+    * Int, but the batch ledger shares this value slot and Structured
+    * Streaming batch ids are unbounded longs — a stream past 2^31
+    * batches must keep committing, not throw. */
   private def readManifest(fs: FileSystem, p: Path): Map[String, Seq[Long]] = {
     val in = fs.open(p)
     val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
@@ -1003,47 +825,40 @@ object StoreSwap {
     }.toMap
   }
 
-  /** The latest committed (version, bucketDir → gens) snapshot of
-    * `dataDir`, or None when no manifest has ever committed (unified
-    * stores: None when the unified manifest holds no bucket entry for
-    * the dataDir — "this dataDir was never written"). Inside an open
+  /** The current (version, bucketDir → gens) snapshot of `dataDir`, or
+    * None when the store is not unified or holds no bucket entry for
+    * the dataDir ("this dataDir was never written"). Inside an open
     * [[transact]] the txn's pending view is returned. */
   def latestSnapshot(spark: SparkSession, path: String,
                      dataDir: String): Option[(Int, Map[String, Seq[Long]])] =
-    if (isUnified(spark, path))
-      unifiedView(spark, path)
-        .map { case (v, all) => (v, sliceDataDir(all, dataDir)) }
-        .filter(_._2.keys.exists(k => !isReservedKey(k)))
-    else {
-      val fs = fsOf(spark, versionsDir(path))
-      manifests(fs, path, dataDir).lastOption
-        .map { case (v, p) => (v, readManifest(fs, p)) }
-    }
+    unifiedView(spark, path)
+      .map { case (v, all) => (v, sliceDataDir(all, dataDir)) }
+      .filter(_._2.nonEmpty)
 
-  private def writeManifest(fs: FileSystem, path: String, dataDir: String,
-                            v: Int, entries: Map[String, Seq[Long]]): Unit = {
+  private def writeManifest(fs: FileSystem, path: String, v: Int,
+                            entries: Map[String, Seq[Long]]): Unit = {
     fs.mkdirs(versionsDir(path))
-    val tmp = new Path(path + s"/_v/.${dataDir}.v$v.tmp")
+    val tmp = new Path(path + s"/_v/.store.v$v.tmp")
     val out = fs.create(tmp, true)
     try out.write(entries.toSeq.sortBy(_._1)
       .map { case (d, gs) => s"$d|${gs.sorted.mkString(",")}" }
       .mkString("\n").getBytes("UTF-8"))
     finally out.close()
-    val dst = new Path(path + s"/_v/$dataDir.v$v")
+    val dst = new Path(path + s"/_v/store.v$v")
     if (fs.exists(dst) || !fs.rename(tmp, dst))
       sys.error(s"could not commit manifest $dst — concurrent mutator?")
   }
 
-  /** Resolved leaf-dir paths of a snapshot, grouped by generation (one
-    * group per basePath for partition-column inference), restricted to
-    * `buckets` when given. */
+  /** Resolved leaf-dir paths of a dataDir snapshot, grouped by
+    * generation (one group per basePath for partition-column
+    * inference), restricted to `buckets` when given. */
   private def snapshotDirs(path: String, dataDir: String,
                            entries: Map[String, Seq[Long]],
                            partCol: String,
                            buckets: Option[Seq[Int]]): Seq[(String, Seq[String])] = {
     val want = buckets.map(_.map(b => s"$partCol=$b").toSet)
     entries.toSeq
-      .filter { case (d, _) => !isReservedKey(d) && want.forall(_.contains(d)) }
+      .filter { case (d, _) => want.forall(_.contains(d)) }
       .flatMap { case (d, gens) => gens.map(g => g -> d) }
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map { case (g, ds) =>
@@ -1052,12 +867,11 @@ object StoreSwap {
       }
   }
 
-  /** Snapshot read of a versioned `dataDir` — resolves the latest
-    * committed manifest ONCE (atomic), reads only the referenced (and,
-    * with `buckets`, requested) immutable dirs. The plan never lists
-    * the live tree, so a concurrent mutation is invisible to it: old
-    * snapshot until the commit, new snapshot after, never a missing
-    * bucket. */
+  /** Snapshot read of `dataDir` — resolves the current manifest ONCE
+    * (atomic), reads only the referenced (and, with `buckets`,
+    * requested) immutable dirs. The plan never lists the live tree, so
+    * a concurrent mutation is invisible to it: old snapshot until the
+    * commit, new snapshot after, never a missing bucket. */
   def readVersioned(spark: SparkSession, path: String, dataDir: String,
                     partCol: String,
                     buckets: Option[Seq[Int]] = None): DataFrame = {
@@ -1067,16 +881,13 @@ object StoreSwap {
     readEntries(spark, path, dataDir, partCol, entries, buckets)
   }
 
-  /** The RETAINED manifest versions of `dataDir`, ascending — the
-    * time-travel horizon. Commits GC manifests beyond the
-    * `graft.store.snapshotKeep` grace window, so this is a sliding
-    * window ending at the live version, not unbounded history; raise
-    * the knob BEFORE the mutations whose pre-states must stay
-    * readable. */
-  def snapshotVersions(spark: SparkSession, path: String,
-                       dataDir: String): Seq[Int] =
-    manifests(fsOf(spark, versionsDir(path)), path,
-      if (isUnified(spark, path)) StoreFamily else dataDir).map(_._1)
+  /** The RETAINED store versions, ascending — the time-travel horizon.
+    * Commits GC manifests beyond the `graft.store.snapshotKeep` grace
+    * window, so this is a sliding window ending at the live version,
+    * not unbounded history; raise the knob BEFORE the mutations whose
+    * pre-states must stay readable. */
+  def snapshotVersions(spark: SparkSession, path: String): Seq[Int] =
+    manifests(fsOf(spark, versionsDir(path)), path).map(_._1)
 
   /** TIME-TRAVEL read: the snapshot of `dataDir` AS OF committed
     * `version` — same single-manifest-resolution guarantee as
@@ -1087,54 +898,26 @@ object StoreSwap {
     * fails fast naming the retained window. */
   def readVersionedAt(spark: SparkSession, path: String, dataDir: String,
                       partCol: String, version: Int,
-                      buckets: Option[Seq[Int]] = None): DataFrame = {
-    val fs = fsOf(spark, versionsDir(path))
-    val unified = isUnified(spark, path)
-    val family = if (unified) StoreFamily else dataDir
-    val all = manifests(fs, path, family)
-    val p = all.collectFirst { case (v, mp) if v == version => mp }
-      .getOrElse {
-        val cutoverHint =
-          if (unified && all.headOption.exists(version < _._1))
-            " — it was either GC'd past graft.store.snapshotKeep or" +
-              " PREDATES this store's unifyVersioning cutover" +
-              " (per-dataDir history does not carry across migration;" +
-              " the unified numbering starts above every pre-migration" +
-              " version so old numbers fail here instead of aliasing." +
-              " Runbook: restore from archive or re-run the producing" +
-              " mutation)"
-          else
-            " (raise graft.store.snapshotKeep before mutating to widen" +
-              " the time-travel window)"
-        sys.error(s"$path/$dataDir has no retained manifest" +
-          s" v$version — retained: ${all.map(_._1).mkString(",")}" +
-          cutoverHint)
-      }
-    val entries =
-      if (unified) sliceDataDir(readManifest(fs, p), dataDir)
-      else readManifest(fs, p)
-    readEntries(spark, path, dataDir, partCol, entries, buckets)
-  }
+                      buckets: Option[Seq[Int]] = None): DataFrame =
+    readEntries(spark, path, dataDir, partCol,
+      snapshotEntriesAt(spark, path, dataDir, version), buckets)
 
-  /** The bucket-dir → generation-list entries of a RETAINED manifest
-    * version (reserved ledger keys excluded) — the metadata a
-    * manifest-pruned diff compares: generations are immutable once
-    * committed, so two versions' entries being EQUAL for a bucket
-    * proves its files (hence rows) are byte-identical without opening
-    * them. */
+  /** The bucket-dir → generation-list entries of `dataDir` in a
+    * RETAINED manifest version — the metadata a manifest-pruned diff
+    * compares: generations are immutable once committed, so two
+    * versions' entries being EQUAL for a bucket proves its files (hence
+    * rows) are byte-identical without opening them. */
   def snapshotEntriesAt(spark: SparkSession, path: String,
                         dataDir: String,
                         version: Int): Map[String, Seq[Long]] = {
     val fs = fsOf(spark, versionsDir(path))
-    val unified = isUnified(spark, path)
-    val family = if (unified) StoreFamily else dataDir
-    val all = manifests(fs, path, family)
+    val all = manifests(fs, path)
     val p = all.collectFirst { case (v, mp) if v == version => mp }
       .getOrElse(sys.error(s"$path/$dataDir has no retained manifest" +
-        s" v$version — retained: ${all.map(_._1).mkString(",")}"))
-    val raw = readManifest(fs, p)
-    (if (unified) sliceDataDir(raw, dataDir) else raw)
-      .filter { case (k, _) => !isReservedKey(k) }
+        s" v$version — retained: ${all.map(_._1).mkString(",")}" +
+        " (raise graft.store.snapshotKeep before mutating to widen the" +
+        " time-travel window)"))
+    sliceDataDir(readManifest(fs, p), dataDir)
   }
 
   private def readEntries(spark: SparkSession, path: String,
@@ -1156,138 +939,41 @@ object StoreSwap {
     }.reduce(_ unionByName _)
   }
 
-  /** Switch a store's `dataDirs` (name → partition column) to the
-    * versioned-manifest commit protocol: each existing legacy dir
-    * becomes generation 0 (one rename) under a v0 manifest; dirs that
-    * don't exist yet simply start versioned on first write. Legacy
-    * sidecar files (meta, codebooks) are untouched — they are
-    * write-once model state. Existing legacy stores keep working
-    * unconverted; versioning is opt-in per store. */
-  def enableVersioning(spark: SparkSession, path: String,
-                       dataDirs: Seq[String]): Unit = withLease(spark, path) {
-    recover(spark, path) // nothing legacy may stay half-swapped behind
-    val fs = fsOf(spark, versionsDir(path))
-    dataDirs.foreach { dataDir =>
-      val live = new Path(s"$path/$dataDir")
-      if (fs.exists(live) && manifests(fs, path, dataDir).isEmpty) {
-        val g0 = new Path(s"$path/$dataDir.gens/g0")
-        fs.mkdirs(g0.getParent)
-        if (!fs.rename(live, g0))
-          sys.error(s"could not migrate $live to $g0")
-        val entries = fs.listStatus(g0)
-          .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-          .map(_.getPath.getName -> Seq(0L)).toMap
-        writeManifest(fs, path, dataDir, 0, entries)
-      }
-    }
-    fs.mkdirs(versionsDir(path)) // the mode marker, even if all-empty
-  }
-
   /** How many PRIOR manifests (and their gens) each commit preserves —
-    * the reader grace window. */
-  private def snapshotKeep(spark: SparkSession): Int =
-    spark.conf.getOption("graft.store.snapshotKeep")
-      .flatMap(_.toIntOption).filter(_ >= 0).getOrElse(1)
-
-  /** The versioned commit: rename staged buckets in as generation
-    * v+1, publish manifest v+1 derived from v by `remap`, GC what no
-    * kept manifest references. Returns nothing the caller needs —
-    * `stagedRewrite` wraps it. */
-  private def commitVersioned(spark: SparkSession, path: String,
-                              dataDir: String, stg: Path,
-                              stagedBuckets: Set[String],
-                              touchedDirs: Set[String],
-                              replaceAll: Boolean,
-                              append: Boolean = false,
-                              batchRecord: Option[Long] = None): Unit = {
-    if (isUnified(spark, path)) {
-      commitUnified(spark, path, dataDir, stg, stagedBuckets, touchedDirs,
-        replaceAll, append, batchRecord)
-      return
+    * the reader grace window and time-travel horizon. Unset means 1; a
+    * value that is not a non-negative integer fails the commit (a typo
+    * must not silently shrink the window a long-running reader or a
+    * pinned replay depends on). */
+  private def snapshotKeep(spark: SparkSession): Int = {
+    val key = "graft.store.snapshotKeep"
+    spark.conf.getOption(key).fold(1) { s =>
+      s.toIntOption.filter(_ >= 0).getOrElse(throw new IllegalArgumentException(
+        s"$key must be a non-negative integer, got '$s'"))
     }
-    val fs = fsOf(spark, stg)
-    val prev = latestSnapshot(spark, path, dataDir)
-    val v1 = prev.map(_._1 + 1).getOrElse(0)
-    val gDir = new Path(s"$path/$dataDir.gens/g$v1")
-    fs.mkdirs(gDir.getParent)
-    // a gen dir at v1 with no manifest v1 is an orphan of a crashed
-    // commit (the manifest rename never happened) — reclaim it
-    if (fs.exists(gDir)) fs.delete(gDir, true)
-    if (stagedBuckets.nonEmpty && !fs.rename(stg, gDir))
-      sys.error(s"could not commit staged generation $gDir")
-    val prevEntries = prev.map(_._2).getOrElse(Map.empty)
-    val entries =
-      if (append) // the new gen EXTENDS its buckets' gen lists
-        prevEntries ++ stagedBuckets.map(d =>
-          d -> (prevEntries.getOrElse(d, Seq.empty) :+ v1.toLong))
-      else
-        // replaceAll drops every BUCKET entry but carries the reserved
-        // metadata keys (#batches) through: a mid-stream full rewrite
-        // (refit, sidecar rebuild) must not amnesia the exactly-once
-        // ledger, or a batch redelivered after the rewrite re-applies
-        (if (replaceAll) prevEntries.filter { case (k, _) => isReservedKey(k) }
-         else prevEntries -- touchedDirs) ++
-          stagedBuckets.map(_ -> Seq(v1.toLong))
-    // the batch ledger rides the same manifest rename as the data it
-    // acknowledges — exactly-once hinges on that atomicity
-    val withLedger = batchRecord match {
-      case Some(id) =>
-        entries + (BatchesKey ->
-          ((prevEntries.getOrElse(BatchesKey, Seq.empty) :+ id)
-            .distinct.takeRight(BatchLedgerKeep)))
-      case None => entries
-    }
-    writeManifest(fs, path, dataDir, v1, withLedger)
-    // GC: drop manifests older than the grace window, then gens no
-    // kept manifest references. Both the live-gen set and the deletion
-    // root are scoped to THIS dataDir — each dataDir has its own .gens
-    // root and manifest family, so gen numbers are only meaningful
-    // per-dataDir.
-    val keep = snapshotKeep(spark)
-    val all = manifests(fs, path, dataDir)
-    all.dropRight(keep + 1).foreach { case (_, p) => fs.delete(p, false) }
-    val kept = manifests(fs, path, dataDir).map { case (_, p) =>
-      readManifest(fs, p) }
-    // reserved entries (#batches) carry batch ids, not generation
-    // numbers — including them would pin unrelated gens forever
-    val live = kept.flatMap(_.collect {
-      case (d, gs) if !isReservedKey(d) => gs
-    }.flatten).toSet
-    val gensRoot = new Path(s"$path/$dataDir.gens")
-    if (fs.exists(gensRoot))
-      fs.listStatus(gensRoot)
-        .map(_.getPath)
-        .filter(p => p.getName.startsWith("g") &&
-          p.getName.stripPrefix("g").toLongOption.exists(!live.contains(_)))
-        .foreach(p => fs.delete(p, true))
   }
 
-  /** Full-overwrite write of a versioned `dataDir`: stage the whole
-    * relation, commit it as the next generation REPLACING every prior
-    * entry — the versioned twin of the legacy writers'
-    * `mode("overwrite").partitionBy(...)`. Readers snapshotted on the
-    * old manifest keep their gens through the grace window. */
-  def versionedOverwrite(spark: SparkSession, path: String,
-                         partCol: String, df: DataFrame,
-                         sortCols: Seq[Column],
-                         dataDir: String): Unit = withLease(spark, path) {
-    val stg = staging(path)
-    val fs = fsOf(spark, stg)
-    if (fs.exists(stg)) fs.delete(stg, true)
-    df.repartition(col(partCol))
-      .sortWithinPartitions(sortCols: _*)
-      .write.partitionBy(partCol).parquet(stg.toString)
-    val stagedBuckets = fs.listStatus(stg)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(partCol + "="))
-      .map(_.getPath.getName).toSet
-    commitVersioned(spark, path, dataDir, stg, stagedBuckets,
-      touchedDirs = Set.empty, replaceAll = true)
-  }
+  /** Full-overwrite write of `dataDir` through the unified manifest:
+    * stage the whole relation, commit it as a fresh generation
+    * REPLACING every prior entry of the dataDir — the unified twin of
+    * the plain writers' `mode("overwrite").partitionBy(...)`. Readers
+    * snapshotted on the old manifest keep their gens through the grace
+    * window. */
+  private def versionedOverwrite(spark: SparkSession, path: String,
+                                 partCol: String, df: DataFrame,
+                                 sortCols: Seq[Column],
+                                 dataDir: String): Unit =
+    withLease(spark, path) {
+      val stg = staging(path)
+      val stagedBuckets = stage(fsOf(spark, stg), stg, partCol, df, sortCols)
+      commitUnified(spark, path, dataDir, stg,
+        stagedBuckets.map(b => s"$partCol=$b"),
+        touchedDirs = Set.empty, replaceAll = true)
+    }
 
-  /** The post-commit half: swap surviving buckets in (one atomic rename
-    * each), drop emptied buckets' live directories, then clear the
-    * manifest and staging remnants. Idempotent — re-runnable after a
-    * crash at any point. */
+  /** The post-commit half of the plain swap: swap surviving buckets in
+    * (one atomic rename each), drop emptied buckets' live directories,
+    * then clear the manifest and staging remnants. Idempotent —
+    * re-runnable after a crash at any point. */
   private def applySwap(spark: SparkSession, path: String, partCol: String,
                         surviving: Seq[Int], emptied: Seq[Int],
                         dataDir: String): Unit = {

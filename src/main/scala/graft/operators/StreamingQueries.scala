@@ -926,11 +926,12 @@ object StreamingQueries {
   /** q224: q212's STREAMING LSH INGEST LOOP under the at-least-once
     * redelivery contract — the text twin of q223's exactly-once gate.
     * The store is VERSIONED and each micro-batch absorbs through
-    * [[Dedup.ingestBatchIntoStore]]: three idempotent merges, then a
-    * ledger ack in the data manifest ([[graft.operators.StoreSwap
-    * .ackBatch]]) as the LAST step. After the stream, batch 0 is
-    * REDELIVERED verbatim (same id, same rows); the acked ledger skips
-    * it before evaluation. The final delta2 judgment must equal q206's
+    * [[Dedup.ingestBatchIntoStore]] as ONE transaction: three merges
+    * plus the ledger ack ([[graft.operators.StoreSwap.ackBatch]])
+    * publish in a single manifest rename ([[graft.operators.StoreSwap
+    * .transact]]). After the stream, batch 0 is REDELIVERED verbatim
+    * (same id, same rows); the acked ledger skips it before
+    * evaluation. The final delta2 judgment must equal q206's
     * batch-flow oracle exactly. Honest scope: the merges' idempotence
     * already makes redelivery content-harmless, so what this gate
     * proves is the composed versioned flow end-to-end; the
@@ -992,14 +993,14 @@ object StreamingQueries {
       .orderBy(col("id_a"), col("id_b"))
   }
 
-  /** q230: q224's STREAMING EXACTLY-ONCE LOOP on the UNIFIED protocol
-    * — each micro-batch's composed ingest (signature MIN-merge +
+  /** q230: q224's STREAMING EXACTLY-ONCE LOOP with its commit count
+    * gated — each micro-batch's composed ingest (signature MIN-merge +
     * shingle replace-merge + band merge + ledger ack) publishes as ONE
     * `store.v<N>` manifest rename ([[graft.operators.StoreSwap
     * .transact]] inside [[Dedup.ingestBatchIntoStore]]), so the gate
     * REQUIRES exactly one version bump per micro-batch and zero for
-    * the post-stream redelivery (skipped from the per-dataDir
-    * namespaced ledger before evaluation). The final delta2 judgment
+    * the post-stream redelivery (skipped from the data stream's
+    * ledger before evaluation). The final delta2 judgment
     * must equal q206's batch-flow oracle exactly — the unified
     * transactional flavor is content-invariant too. */
   def q230StreamUnifiedTxn(spark: SparkSession, dir: String): DataFrame = {
@@ -1014,12 +1015,10 @@ object StreamingQueries {
     val tmp = Fixtures.tempDir("graft-q230-")
     val in = tmp.resolve("in")
     Files.createDirectories(in)
-    // mutating ingest loop: a private clone of the shared VERSIONED
-    // base, migrated to the unified manifest (the migration mutates)
+    // mutating ingest loop: a private clone of the shared VERSIONED base
     val store = Fixtures.cloneDir(
       ScaleQueries.sharedTextStore(spark, dir, versioned = true),
       "graft-q230s-")
-    Dedup.unifySignatureStore(spark, store)
     val preV = Dedup.signatureStoreVersions(spark, store).last
     def stageChunk(df: DataFrame, name: String, mtimeMs: Long): Unit = {
       val stage = tmp.resolve(s"stage-$name")

@@ -70,7 +70,6 @@ object SemanticReplayProbe {
         Similarity.writeStandingStore(assigned(corpus), store, "cluster",
           buckets = 64, versioned = true)
         Similarity.writeCodebook(spark, store, cents)
-        Similarity.unifyStandingStore(spark, store)
       }
       val v0 = Similarity.standingStoreVersions(spark, store).last
       // post-pin: members appended AND the codebook refit (both must

@@ -83,22 +83,25 @@ class StandingStoreSpec extends SparkSpec {
     }.toMap
   }
 
-  test("semanticJudgeStoreAt: pinned replay ignores post-pin members AND codebook; per-dataDir stores refused") {
+  test("semanticJudgeStoreAt: pinned replay ignores post-pin members AND codebook; legacy stores refused") {
     import graft.operators.StoreSwap
     val cents = Similarity.trainCentroids(corpus(), "vec_id", "embedding", 2, 2)
+    val delta = corpus().select((col("vec_id") + 1000L).as("vec_id"),
+      col("embedding"))
+    // a legacy store keeps no history to pin codebook + members at
+    val legacy = Fixtures.tempDir("graft-store-").resolve("sjl").toString
+    Similarity.writeStandingStore(assigned(corpus(), cents), legacy,
+      "cluster", buckets = 8)
+    Similarity.writeCodebook(spark, legacy, cents)
+    val ex = intercept[IllegalArgumentException] {
+      Similarity.semanticJudgeStoreAt(spark, legacy, delta, "vec_id",
+        "embedding", 0, minCos = 0.99)
+    }
+    assert(ex.getMessage.contains("versioned store"), ex.getMessage)
     val path = Fixtures.tempDir("graft-store-").resolve("sj").toString
     Similarity.writeStandingStore(assigned(corpus(), cents), path,
       "cluster", buckets = 8, versioned = true)
     Similarity.writeCodebook(spark, path, cents)
-    // a per-dataDir store cannot pin codebook + members together
-    val delta = corpus().select((col("vec_id") + 1000L).as("vec_id"),
-      col("embedding"))
-    val ex = intercept[IllegalArgumentException] {
-      Similarity.semanticJudgeStoreAt(spark, path, delta, "vec_id",
-        "embedding", 0, minCos = 0.99)
-    }
-    assert(ex.getMessage.contains("UNIFIED"), ex.getMessage)
-    Similarity.unifyStandingStore(spark, path)
     spark.conf.set("graft.store.snapshotKeep", "8")
     try {
       val v0 = Similarity.standingStoreVersions(spark, path).last
@@ -149,7 +152,6 @@ class StandingStoreSpec extends SparkSpec {
     Similarity.writeStandingStore(assigned(corpus(), cents), path,
       "cluster", buckets = 8, versioned = true)
     Similarity.writeCodebook(spark, path, cents)
-    Similarity.unifyStandingStore(spark, path)
     val v0 = Similarity.standingStoreVersions(spark, path).last
     val fresh = Similarity.refitStoreDriftedClusters(spark, path,
       "vec_id", "embedding", drifted = Set(0L),

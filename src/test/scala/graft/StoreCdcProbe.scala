@@ -88,7 +88,6 @@ object StoreCdcProbe {
           store, "doc_id", buckets = 64, versioned = true)
         Dedup.writeBandIndex(spark, store, "doc_id", bands = 8)
         Dedup.writeShingleSidecar(spark, store, corpus, "doc_id", "text")
-        Dedup.unifySignatureStore(spark, store)
       }
       val v0 = Dedup.signatureStoreVersions(spark, store).last
       // inserts ride the composed exactly-once ingest (ONE txn

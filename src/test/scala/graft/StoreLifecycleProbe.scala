@@ -229,32 +229,37 @@ object StoreLifecycleProbe {
     // through the VERSIONED TRIPLE — writePqSidecar commits codebook/
     // meta/codes inside ONE StoreSwap.transact manifest rename and
     // pqTopKStoreTwoLevel resolves all three at one pinned version
-    // (pqPin). The r13 record's sidecar writes ran the legacy
-    // _pending_pq path; these rows are the same mechanisms on the
-    // unified protocol. The first write is the one-time CUTOVER
-    // (legacy dirs retained for in-flight readers), the second the
-    // steady-state reader-atomic rewrite a production store runs.
-    val unifyMigrateSec = t { Similarity.unifyStandingStore(spark, store) }
-    val pqWriteUnifiedCutoverSec = t {
-      Similarity.writePqSidecar(spark, store, "vec_id", "embedding",
+    // (pqPin). The rows above ran the legacy _pending_pq path; these
+    // are the same mechanisms on a VERSIONED copy of the store (same
+    // members and codebook, unified manifest from its first commit).
+    // The first write adds the triple, the second is the steady-state
+    // reader-atomic rewrite a production store runs.
+    val ustore = java.nio.file.Files
+      .createTempDirectory("graft-lc-u-").resolve("standing").toString
+    Similarity.writeStandingStore(
+      Similarity.readStandingStore(spark, store)._1.drop("c_bucket"),
+      ustore, "cluster", buckets = 64, versioned = true)
+    Similarity.writeCodebookIds(spark, ustore,
+      Similarity.readCodebookIds(spark, store))
+    val pqWriteUnifiedFirstSec = t {
+      Similarity.writePqSidecar(spark, ustore, "vec_id", "embedding",
         m = 4, dsub = 16, ksub = 8)
     }
     val pqWriteUnifiedSec = t {
-      Similarity.writePqSidecar(spark, store, "vec_id", "embedding",
+      Similarity.writePqSidecar(spark, ustore, "vec_id", "embedding",
         m = 4, dsub = 16, ksub = 8)
     }
-    // proof the searches below resolve through the pinned triple, not
-    // the legacy live dirs: the triple is present in the unified
-    // manifest line
+    // proof the searches below resolve through the pinned triple: the
+    // triple is present in the store manifest
     val pqUnifiedVersioned = graft.operators.StoreSwap
-      .snapshotVersions(spark, store, "pq_meta").nonEmpty
+      .latestSnapshot(spark, ustore, "pq_meta").isDefined
     val pqSearchUnifiedSec = t {
-      Similarity.pqTopKStoreTwoLevel(spark, store, bigQueries,
+      Similarity.pqTopKStoreTwoLevel(spark, ustore, bigQueries,
         "vec_id", "embedding", m = 4, dsub = 16, k = 5, sProbe = 8,
         nProbe = 4).count()
     }
     val pqSearchUnified100kSec = t {
-      Similarity.pqTopKStoreTwoLevel(spark, store,
+      Similarity.pqTopKStoreTwoLevel(spark, ustore,
         base.filter(col("vec_id") < 100000), "vec_id", "embedding",
         m = 4, dsub = 16, k = 5, sProbe = 8, nProbe = 4).count()
     }
@@ -269,7 +274,7 @@ object StoreLifecycleProbe {
     // never get a partial or aliased snapshot).
     import graft.operators.StoreSwap
     spark.conf.set("graft.store.snapshotKeep", "2")
-    val gcC0 = Similarity.readStandingStore(spark, store)._1.count()
+    val gcC0 = Similarity.readStandingStore(spark, ustore)._1.count()
     val gcAppends4Sec = t {
       (1 to 4).foreach { i =>
         Similarity.appendToStandingStore(
@@ -278,17 +283,17 @@ object StoreLifecycleProbe {
               col("embedding")))
             .select(col("vec_id"), col("embedding"), col("cluster"),
               col("nrm")),
-          store, "cluster")
+          ustore, "cluster")
       }
     }
-    val gcVs = StoreSwap.snapshotVersions(spark, store, "data")
+    val gcVs = StoreSwap.snapshotVersions(spark, ustore)
     // oldest retained = 2 appends in: base + 200 rows, byte-exact
     val gcRetainedIntact = gcVs.size == 3 &&
-      StoreSwap.readVersionedAt(spark, store, "data", "c_bucket",
+      StoreSwap.readVersionedAt(spark, ustore, "data", "c_bucket",
         gcVs.head).count() == gcC0 + 200
     val gcRefusalOk =
       try {
-        StoreSwap.readVersionedAt(spark, store, "data", "c_bucket",
+        StoreSwap.readVersionedAt(spark, ustore, "data", "c_bucket",
           gcVs.head - 1)
         false
       } catch {
@@ -460,8 +465,7 @@ object StoreLifecycleProbe {
       f""""pq256_write_sec":$pqWrite256Sec%.2f,""" +
       f""""pq256_search1000_two_level_sec":$pqSearch256Sec%.2f,""" +
       f""""pq256_vs_float_ladder_overlap_pct":$overlap256Pct,""" +
-      f""""unify_migrate_sec":$unifyMigrateSec%.2f,""" +
-      f""""pq_unified_write_cutover_sec":$pqWriteUnifiedCutoverSec%.2f,""" +
+      f""""pq_unified_write_first_sec":$pqWriteUnifiedFirstSec%.2f,""" +
       f""""pq_unified_write_sec":$pqWriteUnifiedSec%.2f,""" +
       f""""pq_unified_versioned":$pqUnifiedVersioned,""" +
       f""""pq_unified_search1000_sec":$pqSearchUnifiedSec%.2f,""" +

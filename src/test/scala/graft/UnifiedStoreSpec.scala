@@ -3,9 +3,9 @@ package graft
 import graft.operators.{Dedup, Fixtures, StoreSwap}
 import org.apache.spark.sql.functions._
 
-/** The UNIFIED store manifest ([[StoreSwap.unifyVersioning]]): one
-  * `store.v<N>` manifest spanning every dataDir, so composed
-  * multi-dataDir mutations commit with ONE rename
+/** The UNIFIED store manifest every versioned store commits through
+  * from its first write: one `store.v<N>` manifest spanning every
+  * dataDir, so composed multi-dataDir mutations commit with ONE rename
   * ([[StoreSwap.transact]]) and any retained version is a CONSISTENT
   * snapshot of the whole store — bands, sidecar, and signatures
   * together, which is what makes historical judgment replay
@@ -31,7 +31,7 @@ class UnifiedStoreSpec extends SparkSpec {
     df.select("id_a", "id_b").orderBy("id_a", "id_b").collect().toSeq
 
   /** A fully built versioned text store (data + bands + sidecar) over
-    * `standing`, migrated to the unified manifest. */
+    * `standing`. */
   private def buildUnified(standing: org.apache.spark.sql.DataFrame): String = {
     val path = Fixtures.tempDir("graft-ustore-").resolve("s").toString
     Dedup.writeSignatureStore(sigs(standing), path, "doc_id",
@@ -39,43 +39,69 @@ class UnifiedStoreSpec extends SparkSpec {
     Dedup.writeBandIndex(spark, path, "doc_id", bands = 2)
     Dedup.writeShingleSidecar(spark, path, standing, "doc_id", "text",
       n = 3)
-    Dedup.unifySignatureStore(spark, path)
     path
   }
 
-  test("unify is content-invariant and idempotent; later mutations commit unified") {
-    val standing = docs().filter(col("doc_id") < 4)
-    val before = sigRows(sigs(standing))
+  test("a versioned store is unified from its first commit: only store manifests, pinned replay equals the live judgment") {
+    val standing = docs().filter(col("doc_id") =!= 2L)
     val path = buildUnified(standing)
     assert(StoreSwap.isUnified(spark, path))
-    assert(sigRows(Dedup.readSignatureStore(spark, path)._1) == before)
-    // idempotent re-run changes nothing; the unified numbering starts
-    // ABOVE the per-dataDir versions (cutover anti-aliasing), one
-    // retained version right after migration
-    val v0 = StoreSwap.snapshotVersions(spark, path, "data")
-    Dedup.unifySignatureStore(spark, path)
-    assert(StoreSwap.snapshotVersions(spark, path, "data") == v0 &&
-      v0.size == 1)
-    assert(sigRows(Dedup.readSignatureStore(spark, path)._1) == before)
-    // data, bands, bands_inv, and shingles all resolve through the one
-    // manifest and report the SAME version line
-    Seq("bands", "bands_inv", "shingles").foreach { d =>
-      assert(StoreSwap.snapshotVersions(spark, path, d) ==
-        StoreSwap.snapshotVersions(spark, path, "data"), d)
-    }
-    // a post-unify mutation bumps the ONE store version
-    Dedup.mergeIntoSignatureStore(spark, path,
-      sigs(docs().filter(col("doc_id") === 8L)), "doc_id")
-    assert(StoreSwap.snapshotVersions(spark, path, "data").last ==
-      v0.head + 1)
+    // every commit of the build — data, band index + inventory,
+    // sidecar — went through the one store manifest family
+    val names = new java.io.File(s"$path/_v").listFiles().map(_.getName)
+      .filterNot(_.endsWith(".crc")).toSeq
+    assert(names.nonEmpty && names.forall(_.startsWith("store.v")),
+      s"non-store manifests under _v: $names")
     assert(sigRows(Dedup.readSignatureStore(spark, path)._1) ==
-      sigRows(sigs(docs().filter(col("doc_id") < 4 || col("doc_id") === 8L))))
+      sigRows(sigs(standing)))
+    val probe = Seq((100L, "the quick brown fox jumps over the lazy dog"),
+      (101L, "totally unrelated content nothing matches"))
+      .toDF("doc_id", "text")
+    spark.conf.set("graft.store.snapshotKeep", "8")
+    try {
+      val preIngest = StoreSwap.snapshotVersions(spark, path).last
+      val livePre = judgeRows(Dedup.lshJudgeStore(spark, path, standing,
+        probe, "doc_id", "text", n = 3, numHashes = 4))
+      assert(livePre.nonEmpty, "weak scenario: probe matched nothing")
+      // one composed ingest = ONE store version, for every dataDir
+      Dedup.ingestBatchIntoStore(spark, path,
+        docs().filter(col("doc_id") === 2L), "doc_id", "text",
+        n = 3, numHashes = 4)
+      assert(StoreSwap.snapshotVersions(spark, path).last == preIngest + 1)
+      assert(judgeRows(Dedup.lshJudgeStore(spark, path, docs(), probe,
+        "doc_id", "text", n = 3, numHashes = 4)) != livePre,
+        "ingest should have changed the live verdict (weak scenario)")
+      assert(judgeRows(Dedup.lshJudgeStoreAt(spark, path, probe,
+        "doc_id", "text", preIngest, n = 3, numHashes = 4)) == livePre,
+        "pinned replay diverged from the live pre-ingest judgment")
+    } finally spark.conf.unset("graft.store.snapshotKeep")
+  }
+
+  test("graft.store.snapshotKeep: a bad value fails the commit naming key and value, store unchanged") {
+    val standing = docs().filter(col("doc_id") < 4)
+    val path = buildUnified(standing)
+    val preV = StoreSwap.snapshotVersions(spark, path).last
+    Seq("two", "-1").foreach { bad =>
+      spark.conf.set("graft.store.snapshotKeep", bad)
+      try {
+        val ex = intercept[IllegalArgumentException] {
+          Dedup.mergeIntoSignatureStore(spark, path,
+            sigs(docs().filter(col("doc_id") === 8L)), "doc_id")
+        }
+        assert(ex.getMessage.contains("graft.store.snapshotKeep") &&
+          ex.getMessage.contains(s"'$bad'"), ex.getMessage)
+      } finally spark.conf.unset("graft.store.snapshotKeep")
+      assert(StoreSwap.snapshotVersions(spark, path).last == preV,
+        s"snapshotKeep=$bad: the commit published anyway")
+    }
+    assert(sigRows(Dedup.readSignatureStore(spark, path)._1) ==
+      sigRows(sigs(standing)))
   }
 
   test("transact publishes a composed ingest (3 merges + ack) as ONE version; failure leaves the pre-txn state") {
     val standing = docs().filter(col("doc_id") < 4 && col("doc_id") =!= 2L)
     val path = buildUnified(standing)
-    val preV = StoreSwap.snapshotVersions(spark, path, "data").last
+    val preV = StoreSwap.snapshotVersions(spark, path).last
     val preSigs = sigRows(Dedup.readSignatureStore(spark, path)._1)
     // a txn that fails mid-way must leave EVERY dataDir at the pre-txn
     // version — the first merge had already staged and recorded
@@ -87,7 +113,7 @@ class UnifiedStoreSpec extends SparkSpec {
       }
     }
     assert(boom.getMessage.contains("boom"))
-    assert(StoreSwap.snapshotVersions(spark, path, "data").last == preV,
+    assert(StoreSwap.snapshotVersions(spark, path).last == preV,
       "failed txn bumped the store version")
     assert(sigRows(Dedup.readSignatureStore(spark, path)._1) == preSigs,
       "failed txn changed visible data")
@@ -96,7 +122,7 @@ class UnifiedStoreSpec extends SparkSpec {
     val delta = docs().filter(col("doc_id") === 2L || col("doc_id") === 8L)
     Dedup.ingestBatchIntoStore(spark, path, delta, "doc_id", "text",
       batchId = Some(7L), n = 3, numHashes = 4)
-    val postV = StoreSwap.snapshotVersions(spark, path, "data").last
+    val postV = StoreSwap.snapshotVersions(spark, path).last
     assert(postV == preV + 1,
       s"composed ingest took ${postV - preV} commits, wanted 1")
     assert(StoreSwap.committedBatches(spark, path, "data") == Set(7L))
@@ -105,7 +131,7 @@ class UnifiedStoreSpec extends SparkSpec {
     // redelivery of the acked batch is skipped without a version bump
     Dedup.ingestBatchIntoStore(spark, path, delta, "doc_id", "text",
       batchId = Some(7L), n = 3, numHashes = 4)
-    assert(StoreSwap.snapshotVersions(spark, path, "data").last == postV)
+    assert(StoreSwap.snapshotVersions(spark, path).last == postV)
   }
 
   test("historical judgment replays bit-exactly from a pinned unified version") {
@@ -116,7 +142,7 @@ class UnifiedStoreSpec extends SparkSpec {
       .toDF("doc_id", "text")
     spark.conf.set("graft.store.snapshotKeep", "8")
     try {
-      val v0 = StoreSwap.snapshotVersions(spark, path, "data").last
+      val v0 = StoreSwap.snapshotVersions(spark, path).last
       val liveVerdict = judgeRows(Dedup.lshJudgeStore(spark, path,
         standing, probe, "doc_id", "text", n = 3, numHashes = 4))
       // mutate the store: ingest doc 2 (a dup of doc 0) — the LIVE
@@ -133,19 +159,18 @@ class UnifiedStoreSpec extends SparkSpec {
         probe, "doc_id", "text", v0, n = 3, numHashes = 4))
       assert(replay == liveVerdict,
         "pinned replay diverged from the verdict at that version")
-      // per-dataDir versioned stores refuse asOf — signatures alone
-      // cannot replay a judgment
-      val perDir = Fixtures.tempDir("graft-ustore-").resolve("pd").toString
-      Dedup.writeSignatureStore(sigs(standing), perDir, "doc_id",
-        buckets = 8, versioned = true)
-      Dedup.writeBandIndex(spark, perDir, "doc_id", bands = 2)
-      Dedup.writeShingleSidecar(spark, perDir, standing, "doc_id",
+      // legacy stores refuse asOf — they keep no history to replay
+      val legacy = Fixtures.tempDir("graft-ustore-").resolve("lg").toString
+      Dedup.writeSignatureStore(sigs(standing), legacy, "doc_id",
+        buckets = 8)
+      Dedup.writeBandIndex(spark, legacy, "doc_id", bands = 2)
+      Dedup.writeShingleSidecar(spark, legacy, standing, "doc_id",
         "text", n = 3)
       val ex = intercept[IllegalArgumentException] {
-        Dedup.lshJudgeStoreAt(spark, perDir, probe, "doc_id", "text",
+        Dedup.lshJudgeStoreAt(spark, legacy, probe, "doc_id", "text",
           0, n = 3, numHashes = 4)
       }
-      assert(ex.getMessage.contains("UNIFIED"), ex.getMessage)
+      assert(ex.getMessage.contains("versioned store"), ex.getMessage)
     } finally spark.conf.unset("graft.store.snapshotKeep")
   }
 
@@ -190,17 +215,16 @@ class UnifiedStoreSpec extends SparkSpec {
     Similarity.writeStandingStore(assigned(), path, "cluster",
       buckets = 8, versioned = true)
     Similarity.writeCodebook(spark, path, cents)
-    Similarity.unifyStandingStore(spark, path)
     spark.conf.set("graft.store.snapshotKeep", "8")
     try {
       Similarity.writePqSidecar(spark, path, "vec_id", "embedding",
         m = 2, dsub = 2, ksub = 4)
-      // the triple is versioned now — no legacy live dirs, no pending
-      // marker protocol
+      // the triple commits through the manifest — no live dirs, no
+      // pending-marker protocol
       Seq("pq_codebook", "pq_meta", "pq_codes").foreach { d =>
         assert(!new java.io.File(s"$path/$d").exists, s"legacy $d dir")
       }
-      val v0 = StoreSwap.snapshotVersions(spark, path, "pq_meta").last
+      val v0 = StoreSwap.snapshotVersions(spark, path).last
       val servedV0 = Similarity.pqTopKStore(spark, path,
           corpus().filter(col("vec_id") === 1L), "vec_id", "embedding",
           m = 2, dsub = 2, k = 5, nProbe = 2)
@@ -209,7 +233,7 @@ class UnifiedStoreSpec extends SparkSpec {
       // FULL triple rewrite under a different flavor = ONE version bump
       Similarity.writePqSidecar(spark, path, "vec_id", "embedding",
         m = 2, dsub = 2, ksub = 4, residual = true)
-      val v1 = StoreSwap.snapshotVersions(spark, path, "pq_meta").last
+      val v1 = StoreSwap.snapshotVersions(spark, path).last
       assert(v1 == v0 + 1,
         s"triple rewrite took ${v1 - v0} commits, wanted 1")
       // the OLD triple stays resolvable AS A TRIPLE at v0: flavor,
@@ -239,62 +263,11 @@ class UnifiedStoreSpec extends SparkSpec {
           sys.error("crash between meta and codes")
         }
       }
-      assert(StoreSwap.snapshotVersions(spark, path, "pq_meta").last == v1)
+      assert(StoreSwap.snapshotVersions(spark, path).last == v1)
       val liveMeta = StoreSwap.readDir(spark, path, "pq_meta", "part").head
       assert(liveMeta.getAs[Boolean]("residual"),
         "a crashed triple rewrite leaked a partial artifact")
     } finally spark.conf.unset("graft.store.snapshotKeep")
-  }
-
-  test("pre-migration version numbers fail fast with the cutover message (never alias)") {
-    val standing = docs().filter(col("doc_id") < 4)
-    val path = Fixtures.tempDir("graft-ustore-").resolve("cut").toString
-    spark.conf.set("graft.store.snapshotKeep", "8")
-    try {
-      Dedup.writeSignatureStore(sigs(standing), path, "doc_id",
-        buckets = 8, versioned = true)
-      // a second per-dataDir version, so pre-migration history has
-      // MULTIPLE version numbers a user could remember
-      Dedup.mergeIntoSignatureStore(spark, path,
-        sigs(docs().filter(col("doc_id") === 8L)), "doc_id")
-      assert(StoreSwap.snapshotVersions(spark, path, "data") == Seq(0, 1))
-      Dedup.unifySignatureStore(spark, path)
-      val unifiedVs = StoreSwap.snapshotVersions(spark, path, "data")
-      assert(unifiedVs.head > 1,
-        s"unified numbering must start above pre-migration versions:" +
-          s" $unifiedVs")
-      // the pre-migration v0/v1 must not resolve to ANY snapshot —
-      // fail fast, cutover named, runbook included
-      Seq(0, 1).foreach { v =>
-        val ex = intercept[RuntimeException] {
-          StoreSwap.readVersionedAt(spark, path, "data", "d_bucket", v)
-        }
-        assert(ex.getMessage.contains("cutover"), ex.getMessage)
-        assert(ex.getMessage.contains("Runbook"), ex.getMessage)
-      }
-      // the live unified read is intact
-      assert(Dedup.readSignatureStore(spark, path)._1
-        .select("doc_id").distinct().count() == 5)
-    } finally spark.conf.unset("graft.store.snapshotKeep")
-  }
-
-  test("a crashed migration's completed live->g0 rename is adopted, not orphaned") {
-    val standing = docs().filter(col("doc_id") < 4)
-    val before = sigRows(sigs(standing))
-    val path = Fixtures.tempDir("graft-ustore-").resolve("crash").toString
-    Dedup.writeSignatureStore(sigs(standing), path, "doc_id",
-      buckets = 8, versioned = false)
-    // simulate the predecessor's crash window: the live->g0 rename
-    // completed but store.v<N> was never written — a re-run must adopt
-    // g0 as the dataDir's state, not commit a manifest without it
-    val live = new java.io.File(s"$path/data")
-    val g0 = new java.io.File(s"$path/data.gens/g0")
-    assert(g0.getParentFile.mkdirs())
-    assert(live.renameTo(g0))
-    Dedup.unifySignatureStore(spark, path)
-    assert(StoreSwap.isUnified(spark, path))
-    assert(sigRows(Dedup.readSignatureStore(spark, path)._1) == before,
-      "re-run after the crashed migration orphaned the dataDir's data")
   }
 
   test("unified ledgers are namespaced per dataDir: overlapping batch ids don't alias") {
@@ -308,49 +281,6 @@ class UnifiedStoreSpec extends SparkSpec {
     StoreSwap.ackBatch(spark, path, "bands", 5L)
     assert(StoreSwap.committedBatches(spark, path, "bands") == Set(5L))
     assert(StoreSwap.committedBatches(spark, path, "data") == Set(5L))
-  }
-
-  test("the one-time PQ cutover keeps legacy dirs for in-flight readers; the next rewrite retires them") {
-    import graft.operators.Similarity
-    def corpus() = (0L until 40L).map(i =>
-      (i, Seq.tabulate(4)(j => ((i * 7 % 13) + j).toFloat)))
-      .toDF("vec_id", "embedding")
-    val cents = Similarity.trainCentroids(corpus(), "vec_id", "embedding",
-      2, 2)
-    val assigned = corpus()
-      .withColumn("cluster",
-        Similarity.assignCluster(col("embedding"), cents).cast("long"))
-      .withColumn("nrm", Similarity.norm(col("embedding")))
-    val path = Fixtures.tempDir("graft-ustore-").resolve("pqcut").toString
-    Similarity.writeStandingStore(assigned, path, "cluster",
-      buckets = 8, versioned = true)
-    Similarity.writeCodebook(spark, path, cents)
-    // a LEGACY sidecar exists before unification
-    Similarity.writePqSidecar(spark, path, "vec_id", "embedding",
-      m = 2, dsub = 2, ksub = 4)
-    def legacyDirs() = Seq("pq_codebook", "pq_meta", "pq_codes")
-      .filter(d => new java.io.File(s"$path/$d").exists)
-    assert(legacyDirs().size == 3)
-    Similarity.unifyStandingStore(spark, path)
-    // the CUTOVER rewrite publishes the versioned triple but must NOT
-    // delete the legacy dirs — a reader that resolved them just before
-    // the commit may still be scanning
-    Similarity.writePqSidecar(spark, path, "vec_id", "embedding",
-      m = 2, dsub = 2, ksub = 4)
-    assert(legacyDirs().size == 3,
-      "cutover rewrite deleted legacy dirs under a possible reader")
-    // serving goes through the pinned versioned triple regardless
-    assert(Similarity.pqTopKStore(spark, path,
-        corpus().filter(col("vec_id") === 1L), "vec_id", "embedding",
-        m = 2, dsub = 2, k = 5, nProbe = 2).count() == 5)
-    // the NEXT rewrite retires them (pre-cutover readers are gone or
-    // under the legacy maintenance-window contract)
-    Similarity.writePqSidecar(spark, path, "vec_id", "embedding",
-      m = 2, dsub = 2, ksub = 4)
-    assert(legacyDirs().isEmpty, "stale legacy dirs survived a rewrite")
-    assert(Similarity.pqTopKStore(spark, path,
-        corpus().filter(col("vec_id") === 1L), "vec_id", "embedding",
-        m = 2, dsub = 2, k = 5, nProbe = 2).count() == 5)
   }
 
   test("signature-store CDC: doc-level insert/update/delete, unchanged buckets never read") {
@@ -397,7 +327,7 @@ class UnifiedStoreSpec extends SparkSpec {
           .select((col("doc_id") + id).as("doc_id"), col("text")),
         "doc_id", "text", n = 3, numHashes = 4)
       (1L to 5L).foreach(mut)
-      val vs = StoreSwap.snapshotVersions(spark, path, "data")
+      val vs = StoreSwap.snapshotVersions(spark, path)
       assert(vs.size == 3, s"keep=2 must retain keep+1 versions: $vs")
       // every retained version resolves to a COMPLETE snapshot with
       // the expected doc population (v grows by one ingested doc each)
@@ -428,51 +358,6 @@ class UnifiedStoreSpec extends SparkSpec {
     } finally spark.conf.unset("graft.store.snapshotKeep")
   }
 
-  test("a store unified before the ledger was namespaced keeps its exactly-once window") {
-    // ADVICE r14: committedBatches read ONLY the namespaced
-    // '#batches:<dataDir>' key — a store whose manifest still carries
-    // the pre-namespacing store-wide '#batches' silently lost its
-    // ledger on upgrade and re-applied a redelivered batch.
-    val standing = docs().filter(col("doc_id") < 4)
-    val path = buildUnified(standing)
-    Dedup.ingestBatchIntoStore(spark, path,
-      docs().filter(col("doc_id") === 8L), "doc_id", "text",
-      batchId = Some(7L), n = 3, numHashes = 4)
-    // rewrite the latest manifest to the PRE-NAMESPACING layout
-    val mf = new java.io.File(s"$path/_v").listFiles()
-      .filter(_.getName.startsWith("store.v"))
-      .maxBy(_.getName.stripPrefix("store.v").toInt)
-    val body = new String(
-      java.nio.file.Files.readAllBytes(mf.toPath), "UTF-8")
-    assert(body.contains("#batches:data|"), body)
-    java.nio.file.Files.write(mf.toPath,
-      body.replace("#batches:data|", "#batches|").getBytes("UTF-8"))
-    // the raw rewrite invalidates Hadoop LocalFileSystem's checksum
-    // sidecar; drop it (a real pre-namespacing store's crc matches)
-    new java.io.File(mf.getParentFile, s".${mf.getName}.crc").delete()
-    // fallback read: the legacy store-wide window is still the window
-    assert(StoreSwap.committedBatches(spark, path, "data") == Set(7L))
-    val preV = StoreSwap.snapshotVersions(spark, path, "data").last
-    // a redelivered pre-upgrade batch is skipped, not re-applied
-    Dedup.ingestBatchIntoStore(spark, path,
-      docs().filter(col("doc_id") === 8L), "doc_id", "text",
-      batchId = Some(7L), n = 3, numHashes = 4)
-    assert(StoreSwap.snapshotVersions(spark, path, "data").last == preV,
-      "redelivered batch was re-applied after the namespacing upgrade")
-    // the first post-upgrade ack migrates the window into the
-    // namespaced key (union, not replacement)
-    Dedup.ingestBatchIntoStore(spark, path,
-      docs().filter(col("doc_id") === 2L), "doc_id", "text",
-      batchId = Some(8L), n = 3, numHashes = 4)
-    assert(StoreSwap.committedBatches(spark, path, "data") == Set(7L, 8L))
-    // and batch 7 redelivery is STILL a no-op after the migration
-    val v2 = StoreSwap.snapshotVersions(spark, path, "data").last
-    Dedup.ingestBatchIntoStore(spark, path,
-      docs().filter(col("doc_id") === 8L), "doc_id", "text",
-      batchId = Some(7L), n = 3, numHashes = 4)
-    assert(StoreSwap.snapshotVersions(spark, path, "data").last == v2)
-  }
-
   test("a non-local return unwinding a dirty txn fails loudly instead of dropping the work") {
     // ADVICE r14: a body's early `return` after the first mutation
     // unwound transact WITHOUT publishing — the caller believed the
@@ -480,7 +365,7 @@ class UnifiedStoreSpec extends SparkSpec {
     // version. Dirty unwinds must be loud.
     val standing = docs().filter(col("doc_id") < 4)
     val path = buildUnified(standing)
-    val preV = StoreSwap.snapshotVersions(spark, path, "data").last
+    val preV = StoreSwap.snapshotVersions(spark, path).last
     def bad(): Unit =
       StoreSwap.transact(spark, path) {
         Dedup.mergeIntoSignatureStore(spark, path,
@@ -490,7 +375,7 @@ class UnifiedStoreSpec extends SparkSpec {
       }
     val ex = intercept[RuntimeException](bad())
     assert(ex.getMessage.contains("non-local return"), ex.getMessage)
-    assert(StoreSwap.snapshotVersions(spark, path, "data").last == preV,
+    assert(StoreSwap.snapshotVersions(spark, path).last == preV,
       "dirty non-local return published anyway")
     // an early return BEFORE any mutation stays allowed (the
     // documented empty-work pattern)
@@ -500,7 +385,7 @@ class UnifiedStoreSpec extends SparkSpec {
         0
       }
     assert(ok() == 5)
-    assert(StoreSwap.snapshotVersions(spark, path, "data").last == preV)
+    assert(StoreSwap.snapshotVersions(spark, path).last == preV)
   }
 
   test("historical replay resolves the band layout from the pinned manifest, not the live sidecar") {
@@ -513,9 +398,10 @@ class UnifiedStoreSpec extends SparkSpec {
     val path = buildUnified(standing)
     spark.conf.set("graft.store.snapshotKeep", "8")
     try {
-      val v0 = StoreSwap.snapshotVersions(spark, path, "data").last
-      // the cutover seeded the layout record into the migration
-      // manifest: bands=2, r=2, idxBuckets=store buckets=8
+      val v0 = StoreSwap.snapshotVersions(spark, path).last
+      // the index build recorded its layout in the manifest, and later
+      // commits carry it forward: bands=2, r=2, idxBuckets=store
+      // buckets=8
       assert(StoreSwap.storeMetaAt(spark, path, "bands.b", Some(v0))
         .contains(Seq(2L)))
       assert(StoreSwap.storeMetaAt(spark, path, "bands.r", Some(v0))
@@ -544,56 +430,22 @@ class UnifiedStoreSpec extends SparkSpec {
       assert(judgeRows(Dedup.lshJudgeStoreAt(spark, path, probe,
         "doc_id", "text", v0, n = 3, numHashes = 4)) == liveV0,
         "pinned replay used the post-rebuild layout")
-      // a pinned version WITHOUT a layout record while a later one HAS
-      // one proves the index was rebuilt after the pin: fail fast
+      // a pinned version WITHOUT a layout record predates the index
+      // build: fail fast instead of guessing a layout
       val p2 = Fixtures.tempDir("graft-ustore-").resolve("nl").toString
       val s2 = docs().filter(col("doc_id") < 4)
       Dedup.writeSignatureStore(sigs(s2), p2, "doc_id",
         buckets = 8, versioned = true)
       Dedup.writeShingleSidecar(spark, p2, s2, "doc_id", "text", n = 3)
-      Dedup.unifySignatureStore(spark, p2) // no index yet: no record
-      val u0 = StoreSwap.snapshotVersions(spark, p2, "data").last
+      // no index yet: no record
+      val u0 = StoreSwap.snapshotVersions(spark, p2).last
       Dedup.writeBandIndex(spark, p2, "doc_id", bands = 2) // records
       val ex = intercept[IllegalArgumentException] {
         Dedup.lshJudgeStoreAt(spark, p2, probe, "doc_id", "text", u0,
           n = 3, numHashes = 4)
       }
-      assert(ex.getMessage.contains("rebuilt AFTER"), ex.getMessage)
+      assert(ex.getMessage.contains("no band index at version"),
+        ex.getMessage)
     } finally spark.conf.unset("graft.store.snapshotKeep")
-  }
-
-  test("unifyStandingStore cleans a stale legacy codebook dir left by a crash after the versioned commit") {
-    // ADVICE r14: the legacy /codebook delete ran only when
-    // codebookVersioned was still false — a crash between
-    // writeCodebookDf's commit and the delete left the stale dir
-    // permanently because the re-run skipped the whole branch.
-    import graft.operators.Similarity
-    def corpus() = (0L until 40L).map(i =>
-      (i, Seq.tabulate(4)(j => ((i * 7 % 13) + j).toFloat)))
-      .toDF("vec_id", "embedding")
-    val cents = Similarity.trainCentroids(corpus(), "vec_id",
-      "embedding", 2, 2)
-    val assigned = corpus()
-      .withColumn("cluster",
-        Similarity.assignCluster(col("embedding"), cents).cast("long"))
-      .withColumn("nrm", Similarity.norm(col("embedding")))
-    val path = Fixtures.tempDir("graft-ustore-").resolve("cbcr").toString
-    Similarity.writeStandingStore(assigned, path, "cluster",
-      buckets = 4, versioned = true)
-    Similarity.writeCodebook(spark, path, cents)
-    Similarity.unifyStandingStore(spark, path)
-    val before = Similarity.readCodebook(spark, path)
-    val legacy = new java.io.File(s"$path/codebook")
-    assert(!legacy.exists(), "migration left the legacy codebook dir")
-    // simulate the crash window: versioned commit durable, delete lost
-    spark.range(1).select(lit(99L).as("cid"),
-        array(lit(0.0), lit(0.0), lit(0.0), lit(0.0)).as("cent"))
-      .write.parquet(s"$path/codebook")
-    assert(legacy.exists())
-    Similarity.unifyStandingStore(spark, path) // idempotent re-run
-    assert(!legacy.exists(),
-      "re-run left the stale legacy codebook dir in place")
-    assert(Similarity.readCodebook(spark, path) == before,
-      "cleanup damaged the versioned codebook")
   }
 }

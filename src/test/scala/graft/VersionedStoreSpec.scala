@@ -3,14 +3,15 @@ package graft
 import graft.operators.{Dedup, Fixtures, StoreSwap}
 import org.apache.spark.sql.functions._
 
-/** The versioned-manifest snapshot mode ([[StoreSwap]]): reader-atomic
-  * commits for the partitioned stores. A legacy store's swap instant
-  * deletes-then-renames a live bucket dir, so a concurrent listing
-  * reader can see the bucket missing; the versioned mode commits by
-  * renaming ONE manifest file over immutable generation dirs, so a
-  * reader that resolved a manifest always sees a complete store — old
-  * or new, never mid-swap — and keeps its resolved dirs through the GC
-  * grace window (`graft.store.snapshotKeep` prior manifests). */
+/** Versioned stores ([[StoreSwap]]'s unified manifest, written with
+  * `versioned = true`): reader-atomic commits for the partitioned
+  * stores. A legacy store's swap instant deletes-then-renames a live
+  * bucket dir, so a concurrent listing reader can see the bucket
+  * missing; a versioned store commits by renaming ONE manifest file
+  * over immutable generation dirs, so a reader that resolved a manifest
+  * always sees a complete store — old or new, never mid-swap — and
+  * keeps its resolved dirs through the GC grace window
+  * (`graft.store.snapshotKeep` prior manifests). */
 class VersionedStoreSpec extends SparkSpec {
   import spark.implicits._
 
@@ -45,7 +46,7 @@ class VersionedStoreSpec extends SparkSpec {
     val standing = docs().filter(col("doc_id") < 4 && col("doc_id") =!= 2L)
     Dedup.writeSignatureStore(sigs(standing), path, "doc_id",
       buckets = 8, versioned = true)
-    assert(StoreSwap.isVersioned(spark, path))
+    assert(StoreSwap.isUnified(spark, path))
     val (v0, entries0) = StoreSwap.latestSnapshot(spark, path, "data").get
     // the pre-mutation reader's view, fully materialized for comparison
     val before = sigRows(readResolved(path, "data", entries0))
@@ -84,7 +85,7 @@ class VersionedStoreSpec extends SparkSpec {
     val manifests = try listing.toArray.map(_.toString)
       .filter { p => // skip the local FS's hidden .crc checksum twins
         val name = p.substring(p.lastIndexOf('/') + 1)
-        name.startsWith("data.v")
+        name.startsWith("store.v")
       }.sorted.toSeq finally listing.close()
     assert(manifests.size == 2, // latest + one prior (snapshotKeep = 1)
       s"expected a 2-manifest grace window, got $manifests")
@@ -292,24 +293,39 @@ class VersionedStoreSpec extends SparkSpec {
     Dedup.writeShingleSidecar(spark, path, standing, "doc_id", "text",
       n = 3)
     val delta = docs().filter(col("doc_id") === 2L || col("doc_id") === 8L)
-    // "crash" between the merges and the ack: the merges already ran…
-    Dedup.mergeIntoSignatureStore(spark, path, sigs(delta), "doc_id")
-    Dedup.mergeShinglesIntoStore(spark, path, delta, "doc_id", "text")
-    Dedup.mergeIntoBandIndex(spark, path,
-      delta.select(col("doc_id")), "doc_id")
-    assert(StoreSwap.committedBatches(spark, path, "data").isEmpty)
     val preIngest = Dedup.signatureStoreVersions(spark, path).last
-    val afterCrash = sigRows(Dedup.readSignatureStore(spark, path)._1)
+    val before = sigRows(Dedup.readSignatureStore(spark, path)._1)
+    // "crash" between the merges and the ack, inside the ingest's
+    // transaction: the three merges already ran…
+    val crash = intercept[RuntimeException] {
+      StoreSwap.transact(spark, path) {
+        Dedup.mergeIntoSignatureStore(spark, path, sigs(delta), "doc_id")
+        Dedup.mergeShinglesIntoStore(spark, path, delta, "doc_id", "text")
+        Dedup.mergeIntoBandIndex(spark, path,
+          delta.select(col("doc_id")), "doc_id")
+        sys.error("crash before ack")
+      }
+    }
+    assert(crash.getMessage.contains("crash before ack"))
+    // …and the transaction aborted: no version published, no ack, the
+    // live read unchanged
+    assert(Dedup.signatureStoreVersions(spark, path).last == preIngest,
+      "an aborted ingest published a version")
+    assert(StoreSwap.committedBatches(spark, path, "data").isEmpty)
+    assert(sigRows(Dedup.readSignatureStore(spark, path)._1) == before,
+      "an aborted ingest changed the live store")
     // the text twin of readStandingStoreAt: a retained version reads
     // the same complete snapshot the live read sees at that version
     assert(sigRows(Dedup.readSignatureStoreAt(spark, path, preIngest)._1)
-      == afterCrash)
-    // …redelivery re-runs all three idempotently, then acks
+      == before)
+    // redelivery re-runs the whole batch against the unchanged store
+    // and acks it in the same single version
     Dedup.ingestBatchIntoStore(spark, path, delta, "doc_id", "text",
       batchId = Some(0L), n = 3, numHashes = 4)
     assert(StoreSwap.committedBatches(spark, path, "data") == Set(0L))
-    assert(sigRows(Dedup.readSignatureStore(spark, path)._1) == afterCrash,
-      "idempotent re-run changed the store")
+    assert(Dedup.signatureStoreVersions(spark, path).last == preIngest + 1)
+    val after = sigRows(Dedup.readSignatureStore(spark, path)._1)
+    assert(after == sigRows(sigs(docs())))
     // a SECOND redelivery of the acked batch is skipped without
     // evaluating the batch at all
     val boom = org.apache.spark.sql.functions.udf { (s: String) =>
@@ -318,6 +334,7 @@ class VersionedStoreSpec extends SparkSpec {
     Dedup.ingestBatchIntoStore(spark, path,
       delta.withColumn("text", boom(col("text"))), "doc_id", "text",
       batchId = Some(0L), n = 3, numHashes = 4)
+    assert(sigRows(Dedup.readSignatureStore(spark, path)._1) == after)
     // the ledger refuses a legacy store instead of degrading
     val legacy = Fixtures.tempDir("graft-vstore-").resolve("leg").toString
     Dedup.writeSignatureStore(sigs(standing), legacy, "doc_id",
